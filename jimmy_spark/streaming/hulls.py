@@ -10,14 +10,12 @@ vertices)``. So the stream's entire state is the footprint table itself
 history: after any number of batches the latest table equals the batch
 ``group_hulls`` over all points arrived so far, exactly.
 
-Idempotence discipline is streaming/spatial.py's: ``foreachBatch`` is
-at-least-once, so the one write per batch is keyed by the deterministic
-batch id and overwrites — a replayed batch reads only the latest state
-id strictly below its own (its own half-written output never feeds
-itself) and rewrites byte-identically (the hull is a pure function of
-the point set). The output directory IS the state: ``<out_dir>/b=<id>``
-holds the complete per-group footprint table as of batch ``id``; the
-highest id is the current one (``latest_footprints``).
+Idempotence is streaming/state.py's ``BatchDirs``: a replayed batch
+reads only the latest state id strictly below its own and rewrites
+byte-identically (the hull is a pure function of the point set). The
+output directory IS the state: ``<out_dir>/b=<id>`` holds the complete
+per-group footprint table as of batch ``id``; the highest id is the
+current one (``latest_footprints``).
 
 ``n_points`` in the output counts rows reaching the reduce (new points
 + carried vertices) — a per-batch plumbing detail, NOT a cumulative
@@ -26,34 +24,20 @@ point count; hulls are size-oblivious by design (operators/hull.py).
 
 from __future__ import annotations
 
-import os
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from jimmy_spark.operators import hull
-
-
-def _state_ids(out_dir: str, below: int | None = None) -> list[int]:
-    if not os.path.isdir(out_dir):
-        return []
-    ids = [
-        int(e.split("=", 1)[1])
-        for e in os.listdir(out_dir)
-        if e.startswith("b=")
-    ]
-    if below is not None:
-        ids = [i for i in ids if i < below]
-    return sorted(ids)
+from jimmy_spark.streaming.state import BatchDirs, drain
 
 
 def latest_footprints(spark: SparkSession, out_dir: str) -> DataFrame | None:
     """The current per-group footprint table (highest committed batch id),
     or None before the first batch."""
-    ids = _state_ids(out_dir)
-    if not ids:
-        return None
-    return spark.read.parquet(f"{out_dir}/b={ids[-1]}")
+    out = BatchDirs(out_dir)
+    ids = out.ids()
+    return out.read(spark, ids[-1:]) if ids else None
 
 
 def run_hull_stream(
@@ -74,12 +58,13 @@ def run_hull_stream(
     files arrive folds ONLY the new files in; calling again with nothing
     new is a no-op."""
     gcols = list(group_cols)
+    out = BatchDirs(out_dir)
 
     def _process(batch_df, batch_id: int) -> None:
         pts = batch_df.select(*gcols, lat_col, lon_col)
-        older = _state_ids(out_dir, below=batch_id)
+        older = out.ids(below=batch_id)
         if older:
-            prev = spark.read.parquet(f"{out_dir}/b={older[-1]}")
+            prev = out.read(spark, older[-1:])
             v = F.explode(F.arrays_zip("hull_lat", "hull_lon")).alias("v")
             prev_pts = prev.select(*gcols, v).select(
                 *gcols,
@@ -87,18 +72,11 @@ def run_hull_stream(
                 F.col("v.hull_lon").alias(lon_col),
             )
             pts = pts.unionByName(prev_pts)
-        hull.group_hulls(pts, gcols, lat_col=lat_col, lon_col=lon_col).write.mode(
-            "overwrite"
-        ).parquet(f"{out_dir}/b={batch_id}")
+        out.write(
+            batch_id, hull.group_hulls(pts, gcols, lat_col=lat_col, lon_col=lon_col)
+        )
 
-    reader = spark.readStream.schema(source_schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(points_dir)
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        spark, points_dir, source_schema, checkpoint_dir, _process,
+        max_files_per_trigger,
     )
-    q.awaitTermination()

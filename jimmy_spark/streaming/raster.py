@@ -12,7 +12,7 @@ render. Pixel counts are a MONOID (per-(tile, pixel) sums), so
 identity that makes operators/raster.render_heat_pyramid derive coarse
 zooms from the finest frame.
 
-State layout (the proximity/keep-best discipline, batch-id-keyed):
+State layout (batch-id-keyed, streaming/state.py ``BatchDirs``):
 
 - ``<out>/counts/b=<id>``: the UPDATED (x, y, px, py, cnt) rows for the
   tiles batch ``id`` dirtied — always a tile's complete pixel set, so
@@ -22,108 +22,31 @@ State layout (the proximity/keep-best discipline, batch-id-keyed):
 
 ``latest_heat_tiles`` folds latest-per-tile across the batch dirs and
 equals the batch ``render_heat_tiles`` over every point seen — the
-tests compare tile BYTES. Idempotence: ``foreachBatch`` is
-at-least-once, so a replayed batch reads state strictly below its own
-id (its half-written output never feeds itself) and overwrites its two
-dirs deterministically. Long streams accumulate one dir per dirty
-batch; compaction is a single rewrite of latest-per-tile into one dir
-(``compact_state``) and changes nothing observable.
+tests compare tile BYTES. A replayed batch reads state strictly below
+its own id and overwrites its two dirs deterministically. Long streams
+accumulate one dir per dirty batch; compaction is a single rewrite of
+latest-per-tile into one dir (``compact_state``) and changes nothing
+observable.
 """
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from jimmy_spark.codecs import png
 from jimmy_spark.functions import tiles
 from jimmy_spark.operators.raster import TILE_PX, _TILE_SCHEMA, tone_map
-
-
-def _recover_compact(dir_: str) -> None:
-    """Complete a compact_state swap interrupted by a crash. The swap
-    journal is the tombstone name itself: ``_tombstone_b=<i>`` means a
-    compaction fold of EVERY existing batch id was in flight, intended
-    as the new ``b=<i>``. If ``_compact`` is fully written (or already
-    promoted to ``b=<i>``), promote it if needed and finish the
-    interrupted cleanup — older b= dirs are folded INTO ``b=<i>``, and
-    union-folded lanes (keep-best points/edges) would double-count any
-    survivor, so the tombstone is only removed once they are gone. If
-    ``_compact`` is absent or incomplete the tombstone is restored
-    verbatim and every older dir kept. Either way exactly one coherent
-    state exists afterwards — the accumulated state is never observable
-    as empty or duplicated (the r5 ordering deleted ``b=<max>`` before
-    renaming ``_compact`` into place, so a crash in between silently
-    dropped ALL accumulated tile counts)."""
-    if not os.path.isdir(dir_):
-        return
-    import shutil
-
-    for e in os.listdir(dir_):
-        if not e.startswith("_tombstone_b="):
-            continue
-        i = int(e.split("=", 1)[1])
-        compact = f"{dir_}/_compact"
-        # parquet writes drop a _SUCCESS marker; an unmarked _compact is
-        # a half-written overwrite — discard it and keep the tombstone
-        if os.path.exists(f"{compact}/_SUCCESS") and not os.path.isdir(
-            f"{dir_}/b={i}"
-        ):
-            os.rename(compact, f"{dir_}/b={i}")
-        if os.path.isdir(f"{dir_}/b={i}"):
-            # b=<i> can only exist alongside its tombstone via the
-            # promote rename, so the fold is in place: finish the
-            # cleanup, tombstone LAST so a crash here re-enters this
-            # branch with the journal intact
-            for o in os.listdir(dir_):
-                if o.startswith("b=") and int(o.split("=", 1)[1]) < i:
-                    shutil.rmtree(f"{dir_}/{o}")
-            shutil.rmtree(f"{dir_}/{e}")
-        else:
-            os.rename(f"{dir_}/{e}", f"{dir_}/b={i}")
-
-
-def _state_ids(dir_: str, below: int | None = None) -> list[int]:
-    if not os.path.isdir(dir_):
-        return []
-    _recover_compact(dir_)
-    ids = [
-        int(e.split("=", 1)[1]) for e in os.listdir(dir_) if e.startswith("b=")
-    ]
-    if below is not None:
-        ids = [i for i in ids if i < below]
-    return sorted(ids)
-
-
-def _latest_per_tile(
-    spark: SparkSession, dir_: str, ids: list[int]
-) -> DataFrame | None:
-    """Rows of the highest batch dir per (x, y) across the given batch
-    ids — each batch writes a dirty tile's COMPLETE row set, so the max
-    batch id per tile owns all its current rows. Explicit dir list (not
-    the parent) so a replaying batch never reads ids at-or-above its
-    own half-written output."""
-    if not ids:
-        return None
-    df = spark.read.option("basePath", dir_).parquet(
-        *[f"{dir_}/b={i}" for i in ids]
-    )
-    w = Window.partitionBy("x", "y")
-    return (
-        df.withColumn("_mb", F.max("b").over(w))
-        .filter(F.col("b") == F.col("_mb"))
-        .drop("b", "_mb")
-    )
+from jimmy_spark.streaming.state import BatchDirs, drain, require_drained
 
 
 def latest_heat_tiles(spark: SparkSession, out_dir: str) -> DataFrame | None:
     """The current rendered tile set (latest row per tile), or None
     before the first batch. Equal to batch ``render_heat_tiles`` over
     every point arrived so far."""
-    return _latest_per_tile(spark, f"{out_dir}/tiles", _state_ids(f"{out_dir}/tiles"))
+    rendered = BatchDirs(f"{out_dir}/tiles")
+    return rendered.fold_latest(spark, ["x", "y"], rendered.ids())
 
 
 def _delta_counts(pts: DataFrame, zoom: int, lat_col: str, lon_col: str) -> DataFrame:
@@ -184,14 +107,12 @@ def run_heat_tile_stream(
     ``checkpoint_dir``, batch-id-keyed overwrite under ``out_dir``),
     then return. Calling again after more files arrive folds only the
     new files; calling again with nothing new is a no-op."""
-    counts_dir = f"{out_dir}/counts"
-    tiles_dir = f"{out_dir}/tiles"
+    counts = BatchDirs(f"{out_dir}/counts")
+    rendered = BatchDirs(f"{out_dir}/tiles")
 
     def _process(batch_df, batch_id: int) -> None:
         delta = _delta_counts(batch_df, zoom, lat_col, lon_col)
-        prev = _latest_per_tile(
-            spark, counts_dir, _state_ids(counts_dir, below=batch_id)
-        )
+        prev = counts.fold_latest(spark, ["x", "y"], counts.ids(below=batch_id))
         if prev is not None:
             dirty = delta.select("x", "y").distinct()
             carried = prev.join(dirty, ["x", "y"], "left_semi")
@@ -202,58 +123,22 @@ def run_heat_tile_stream(
             )
         # two actions share the delta plan (scan + state join); pin it
         delta = delta.persist()
-        delta.write.mode("overwrite").parquet(f"{counts_dir}/b={batch_id}")
-        _render_tiles(delta, zoom).write.mode("overwrite").parquet(
-            f"{tiles_dir}/b={batch_id}"
-        )
+        counts.write(batch_id, delta)
+        rendered.write(batch_id, _render_tiles(delta, zoom))
         delta.unpersist()
 
-    reader = spark.readStream.schema(source_schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(points_dir)
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        spark, points_dir, source_schema, checkpoint_dir, _process,
+        max_files_per_trigger,
     )
-    q.awaitTermination()
 
 
-def _promote_compact(dir_: str, ids: list[int]) -> None:
-    """Crash-safe swap tail shared by every compacting lane: assumes
-    ``<dir_>/_compact`` is a FULLY-written parquet dir holding the folded
-    state for batch ids ``ids``. (The r5 order rmtree'd b=<max> BEFORE
-    renaming _compact into place — a crash in between left no b= dirs and
-    the next batch folded into empty state.) Journal the max dir as a
-    tombstone carrying its id, promote _compact (atomic rename), and only
-    then delete the tombstone and the older dirs — the full state is
-    readable at every instant, and a crash at any point is repaired by
-    ``_recover_compact`` on the next read. The tombstone is deleted
-    LAST: it journals the older-dir cleanup too, which union-folded
-    lanes need completed before the state is read again."""
-    import shutil
-
-    os.rename(f"{dir_}/b={ids[-1]}", f"{dir_}/_tombstone_b={ids[-1]}")
-    os.rename(f"{dir_}/_compact", f"{dir_}/b={ids[-1]}")
-    for i in ids[:-1]:
-        shutil.rmtree(f"{dir_}/b={i}")
-    shutil.rmtree(f"{dir_}/_tombstone_b={ids[-1]}")
-
-
-def compact_state(spark: SparkSession, out_dir: str) -> None:
+def compact_state(spark: SparkSession, out_dir: str, checkpoint_dir: str) -> None:
     """Fold the accumulated batch dirs into single dirs holding the
     latest row per tile (id = highest existing batch). Observationally a
     no-op for ``latest_heat_tiles``; bounds the per-batch state read for
-    long-lived streams. Call between drained runs only — never between a
-    crash and its restart, where the checkpoint may replay the highest
-    batch id against state folded INTO that id."""
+    long-lived streams. Raises if the stream at ``checkpoint_dir`` has a
+    batch to replay (``require_drained``)."""
+    require_drained(checkpoint_dir)
     for sub in ("counts", "tiles"):
-        dir_ = f"{out_dir}/{sub}"
-        ids = _state_ids(dir_)  # also completes any interrupted swap
-        if len(ids) <= 1:
-            continue
-        cur = _latest_per_tile(spark, dir_, ids)
-        cur.write.mode("overwrite").parquet(f"{dir_}/_compact")
-        _promote_compact(dir_, ids)
+        BatchDirs(f"{out_dir}/{sub}").compact_latest(spark, ["x", "y"])

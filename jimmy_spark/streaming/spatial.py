@@ -25,11 +25,14 @@ production continuous deployment drops the trigger for micro-batching.
 
 from __future__ import annotations
 
+import json
+
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from jimmy_spark.operators import fused
 from jimmy_spark.sources.images import IMAGES_SCHEMA
+from jimmy_spark.streaming.state import BatchDirs, drain, require_drained
 
 
 def spatial_ingest_stream(
@@ -103,15 +106,12 @@ def run_proximity_stream(
     neighborhoods (the streaming analogue of the grid join's
     output-proportional candidate bound).
 
-    Exactly-once across restarts WITHOUT a sink transaction log:
-    ``foreachBatch`` is at-least-once, so both writes are keyed by the
-    deterministic batch id and use overwrite — a replayed batch (same
-    source offsets -> same rows) overwrites itself byte-identically:
+    Exactly-once across restarts WITHOUT a sink transaction log, by the
+    batch-keyed overwrite of ``streaming.state.BatchDirs``:
 
     - ``<out_dir>/b=<id>``   new pairs of this batch
     - ``<state_dir>/b=<id>`` this batch's points (the OLD side of later
-      batches; a replayed batch reads only ids < its own, so its own
-      half-written state never leaks into its OLD side)
+      batches)
 
     Reference analogue: jimmy's idempotent re-run naming
     (common.py:171-202) — here idempotence comes from source offsets +
@@ -121,28 +121,18 @@ def run_proximity_stream(
     """
     from jimmy_spark.operators.distjoin import distance_join_grid_incremental
 
+    out, state = BatchDirs(out_dir), BatchDirs(state_dir)
+
     def _process(batch_df, batch_id: int) -> None:
         pts = batch_df.select("image_id", "lat_e7", "lon_e7")
-        older = _curation_ids(state_dir, below=batch_id)  # repairs swaps
-        if older:
-            old = spark.read.parquet(*[f"{state_dir}/b={i}" for i in older])
-        else:
-            old = spark.createDataFrame([], POINTS_SCHEMA)
-        pairs = distance_join_grid_incremental(pts, old, d=d)
-        pairs.write.mode("overwrite").parquet(f"{out_dir}/b={batch_id}")
-        pts.write.mode("overwrite").parquet(f"{state_dir}/b={batch_id}")
+        old = state.read_below(spark, batch_id, POINTS_SCHEMA)
+        out.write(batch_id, distance_join_grid_incremental(pts, old, d=d))
+        state.write(batch_id, pts)
 
-    reader = spark.readStream.schema(POINTS_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(points_dir)
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        spark, points_dir, POINTS_SCHEMA, checkpoint_dir, _process,
+        max_files_per_trigger,
     )
-    q.awaitTermination()
 
 
 SCENE_SCHEMA = "image_id string, lat_e7 long, lon_e7 long, ahash long"
@@ -166,8 +156,7 @@ def run_scene_dup_stream(
     batches the union of emitted pairs equals the batch
     ``scene_dup_pairs`` over all images, each pair exactly once.
 
-    State/idempotence discipline is ``run_proximity_stream``'s verbatim
-    (batch-id-keyed overwrite, replays read only older state,
+    State and idempotence are ``run_proximity_stream``'s (``BatchDirs``,
     ``compact_pair_stream_state`` between drained runs); like that
     stream — and unlike the tau-bounded contact stream — every old image
     stays relevant forever (a new shot can near-dup any historical one),
@@ -175,28 +164,20 @@ def run_scene_dup_stream(
     """
     from jimmy_spark.operators.imagedup import scene_dup_pairs_incremental
 
+    out, state = BatchDirs(out_dir), BatchDirs(state_dir)
+
     def _process(batch_df, batch_id: int) -> None:
         pts = batch_df.select("image_id", "lat_e7", "lon_e7", "ahash")
-        older = _curation_ids(state_dir, below=batch_id)  # repairs swaps
-        if older:
-            old = spark.read.parquet(*[f"{state_dir}/b={i}" for i in older])
-        else:
-            old = spark.createDataFrame([], SCENE_SCHEMA)
-        pairs = scene_dup_pairs_incremental(pts, old, d=d, threshold=threshold)
-        pairs.write.mode("overwrite").parquet(f"{out_dir}/b={batch_id}")
-        pts.write.mode("overwrite").parquet(f"{state_dir}/b={batch_id}")
+        old = state.read_below(spark, batch_id, SCENE_SCHEMA)
+        out.write(
+            batch_id, scene_dup_pairs_incremental(pts, old, d=d, threshold=threshold)
+        )
+        state.write(batch_id, pts)
 
-    reader = spark.readStream.schema(SCENE_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(points_dir)
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        spark, points_dir, SCENE_SCHEMA, checkpoint_dir, _process,
+        max_files_per_trigger,
     )
-    q.awaitTermination()
 
 
 CURATE_SCHEMA = (
@@ -205,48 +186,11 @@ CURATE_SCHEMA = (
 )
 
 
-def _curation_ids(out_dir: str, below: int | None = None) -> list[int]:
-    import os
-
-    from jimmy_spark.streaming.raster import _recover_compact
-
-    if not os.path.isdir(out_dir):
-        return []
-    _recover_compact(out_dir)  # complete any interrupted compaction swap
-    ids = [
-        int(e.split("=", 1)[1])
-        for e in os.listdir(out_dir)
-        if e.startswith("b=")
-    ]
-    if below is not None:
-        ids = [i for i in ids if i < below]
-    return sorted(ids)
-
-
-def _fold_curation(spark: SparkSession, out_dir: str, ids: list[int]):
-    """Latest row per image across the given batch dirs — each batch
-    writes labels only for the components its pair delta touched (the
-    dirty-group discipline of the quantile/heat-tile/hull lanes), so
-    the highest batch id per image owns its current label."""
-    from pyspark.sql import Window
-
-    if not ids:
-        return None
-    df = spark.read.option("basePath", out_dir).parquet(
-        *[f"{out_dir}/b={i}" for i in ids]
-    )
-    w = Window.partitionBy("image_id").orderBy(F.col("b").desc())
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter("_rn = 1")
-        .drop("_rn", "b")
-    )
-
-
 def latest_curation(spark: SparkSession, out_dir: str):
     """The current COMPLETE keep-best curation table (folded across the
     dirty-component batch dirs), or None before the first batch."""
-    return _fold_curation(spark, out_dir, _curation_ids(out_dir))
+    out = BatchDirs(out_dir)
+    return out.fold_latest(spark, ["image_id"], out.ids())
 
 
 def run_keep_best_stream(
@@ -283,48 +227,27 @@ def run_keep_best_stream(
     State under ``state_dir``: ``points/b=<id>`` (the batch's quality-
     carrying points — the incremental join's old side) and
     ``edges/b=<id>`` (that batch's pair delta in numeric-id space).
-    Idempotence discipline is ``run_proximity_stream``'s: every write is
-    keyed by the deterministic batch id and overwrites; a replayed batch
-    reads only state strictly below its own id and recomputes its delta
-    and output byte-identically. Long streams accumulate one dir per
-    batch in all three families; ``compact_keep_best_state`` folds them
-    into one dir each between drained runs (observationally a no-op).
+    Idempotence is ``BatchDirs``': a replayed batch reads only state
+    strictly below its own id and recomputes its delta and output
+    byte-identically. Long streams accumulate one dir per batch in all
+    three families; ``compact_keep_best_state`` folds them into one dir
+    each between drained runs (observationally a no-op).
     """
-    import os
-
     from jimmy_spark.operators.imagedup import (
         keep_best_from_pairs,
         scene_dup_pairs_incremental,
     )
-    from jimmy_spark.streaming.raster import _recover_compact
 
-    pts_dir = f"{state_dir}/points"
-    edge_dir = f"{state_dir}/edges"
-
-    def _older(dir_: str, batch_id: int) -> list[str]:
-        if not os.path.isdir(dir_):
-            return []
-        _recover_compact(dir_)  # complete any interrupted compaction swap
-        return [
-            f"{dir_}/b={i}"
-            for i in sorted(
-                int(e.split("=", 1)[1])
-                for e in os.listdir(dir_)
-                if e.startswith("b=") and int(e.split("=", 1)[1]) < batch_id
-            )
-        ]
+    out = BatchDirs(out_dir)
+    point_state = BatchDirs(f"{state_dir}/points")
+    edge_state = BatchDirs(f"{state_dir}/edges")
 
     def _process(batch_df, batch_id: int) -> None:
         nid = F.expr(num_id_sql).alias("_nid")
         pts = batch_df.select(
             "image_id", "lat_e7", "lon_e7", "ahash", "sharp_e3", "clip_e3"
         )
-        older_pts = _older(pts_dir, batch_id)
-        old = (
-            spark.read.parquet(*older_pts)
-            if older_pts
-            else spark.createDataFrame([], CURATE_SCHEMA)
-        )
+        old = point_state.read_below(spark, batch_id, CURATE_SCHEMA)
         delta = scene_dup_pairs_incremental(
             pts.select("image_id", nid, "lat_e7", "lon_e7", "ahash"),
             old.select("image_id", nid, "lat_e7", "lon_e7", "ahash"),
@@ -332,10 +255,9 @@ def run_keep_best_stream(
             threshold=threshold,
             id_col="_nid",
         ).select("a_id", "b_id")
-        delta.write.mode("overwrite").parquet(f"{edge_dir}/b={batch_id}")
+        edge_state.write(batch_id, delta)
 
-        older_edges = _older(edge_dir, batch_id)
-        edges = spark.read.parquet(f"{edge_dir}/b={batch_id}", *older_edges)
+        edges = edge_state.read(spark, [batch_id, *edge_state.ids(below=batch_id)])
         base = old.unionByName(pts).select(
             "image_id", nid, "sharp_e3", "clip_e3"
         )
@@ -351,13 +273,11 @@ def run_keep_best_stream(
         # CC over the restricted subgraph equals the full run restricted
         # to dirty nodes, and untouched rows keep their committed labels
         # (latest_curation folds latest-per-image across batch dirs).
-        prev = _fold_curation(
-            spark, out_dir, _curation_ids(out_dir, below=batch_id)
-        )
+        prev = out.fold_latest(spark, ["image_id"], out.ids(below=batch_id))
         if prev is None:
             labels = keep_best_from_pairs(base, edges)
         else:
-            delta_committed = spark.read.parquet(f"{edge_dir}/b={batch_id}")
+            delta_committed = edge_state.read(spark, [batch_id])
             seeds = (
                 delta_committed.select(F.col("a_id").alias("_nid"))
                 .unionByName(delta_committed.select(F.col("b_id").alias("_nid")))
@@ -380,24 +300,17 @@ def run_keep_best_stream(
                 "left_semi",
             )
             labels = keep_best_from_pairs(base_dirty, edges_dirty)
-        labels.write.mode("overwrite").parquet(f"{out_dir}/b={batch_id}")
-        pts.write.mode("overwrite").parquet(f"{pts_dir}/b={batch_id}")
+        out.write(batch_id, labels)
+        point_state.write(batch_id, pts)
 
-    reader = spark.readStream.schema(CURATE_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(points_dir)
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        spark, points_dir, CURATE_SCHEMA, checkpoint_dir, _process,
+        max_files_per_trigger,
     )
-    q.awaitTermination()
 
 
 def compact_keep_best_state(
-    spark: SparkSession, out_dir: str, state_dir: str
+    spark: SparkSession, out_dir: str, state_dir: str, checkpoint_dir: str
 ) -> None:
     """Fold the keep-best stream's accumulated batch dirs into single
     dirs (id = highest existing batch): labels to latest-per-image (the
@@ -406,48 +319,27 @@ def compact_keep_best_state(
     the union IS the state). Observationally a no-op for
     ``latest_curation`` and for the next drain's state reads; bounds the
     per-batch read fan-in for long-lived streams — without it the
-    edge/point dir count grows with stream lifetime (the heat-tile
-    lane's ``compact_state`` discipline: same crash-safe tombstone swap,
-    same ``_recover_compact`` read-side repair). Call between drained
-    runs only — never between a crash and its restart, where the
-    checkpoint may replay the highest batch id against state folded
-    INTO that id."""
-    from jimmy_spark.streaming.raster import _promote_compact
-
-    ids = _curation_ids(out_dir)  # also completes any interrupted swap
-    if len(ids) > 1:
-        cur = _fold_curation(spark, out_dir, ids)
-        cur.write.mode("overwrite").parquet(f"{out_dir}/_compact")
-        _promote_compact(out_dir, ids)
+    edge/point dir count grows with stream lifetime. Raises if the
+    stream at ``checkpoint_dir`` has a batch to replay
+    (``require_drained``)."""
+    require_drained(checkpoint_dir)
+    BatchDirs(out_dir).compact_latest(spark, ["image_id"])
     for sub in ("points", "edges"):
-        _compact_union_dir(spark, f"{state_dir}/{sub}")
-
-
-def _compact_union_dir(spark: SparkSession, dir_: str) -> None:
-    """Fold a union-semantics ``b=<id>`` dir family (each row written
-    once, at its arrival batch; state = the exact row union) into one
-    dir at the highest existing id, with the shared crash-safe swap."""
-    from jimmy_spark.streaming.raster import _promote_compact
-
-    ids = _curation_ids(dir_)  # also completes any interrupted swap
-    if len(ids) > 1:
-        rows = spark.read.parquet(*[f"{dir_}/b={i}" for i in ids])
-        rows.write.mode("overwrite").parquet(f"{dir_}/_compact")
-        _promote_compact(dir_, ids)
+        BatchDirs(f"{state_dir}/{sub}").compact_union(spark)
 
 
 def compact_pair_stream_state(
-    spark: SparkSession, out_dir: str, state_dir: str
+    spark: SparkSession, out_dir: str, state_dir: str, checkpoint_dir: str
 ) -> None:
     """Compaction for ``run_proximity_stream`` / ``run_scene_dup_stream``:
     both families are union folds — ``out_dir`` is the emitted-pair log
     (each pair exactly once across the stream), ``state_dir`` the
     accumulated points. Observationally a no-op for pair readers (they
     glob ``b=*``) and for the next drain's OLD side; bounds the
-    per-batch read fan-in. Same contract as ``compact_keep_best_state``:
-    call between drained runs only."""
-    _compact_union_dir(spark, out_dir)
-    _compact_union_dir(spark, state_dir)
+    per-batch read fan-in. Same contract as ``compact_keep_best_state``."""
+    require_drained(checkpoint_dir)
+    BatchDirs(out_dir).compact_union(spark)
+    BatchDirs(state_dir).compact_union(spark)
 
 
 PINGS_SCHEMA = "entity_id long, seq long, ts timestamp, lat_e7 long, lon_e7 long"
@@ -461,28 +353,18 @@ def retained_state_batches(state_dir: str, batch_id: int, cutoff_ep: int):
     skipped_count) — the skip count is what makes state BOUNDED: at a
     steady event-time rate the retained set is O(tau / batch-span)
     batches, independent of stream lifetime."""
-    import json
-    import os
-
-    if not os.path.isdir(state_dir):
-        return [], 0
+    state = BatchDirs(state_dir)
     keep, skipped = [], 0
-    for e in sorted(os.listdir(state_dir)):
-        if not e.startswith("b="):
-            continue
-        bid = int(e.split("=", 1)[1])
-        if bid >= batch_id:
-            continue
-        meta_path = os.path.join(state_dir, e, "_max_ts.json")
+    for i in state.ids(below=batch_id):
         try:
-            with open(meta_path) as f:
+            with open(f"{state.path(i)}/_max_ts.json") as f:
                 max_ep = json.load(f)["max_ep"]
-        except Exception:
+        except (OSError, ValueError, KeyError, TypeError):
             max_ep = None  # unreadable meta: keep (correctness first)
         if max_ep is not None and max_ep < cutoff_ep:
             skipped += 1
-            continue
-        keep.append(os.path.join(state_dir, e))
+        else:
+            keep.append(state.path(i))
     return keep, skipped
 
 
@@ -513,15 +395,13 @@ def run_contact_stream(
     skips expired ones, so per-batch reads are O(tau / batch-span)
     regardless of stream lifetime.
 
-    Exactly-once across restarts by the proximity stream's discipline:
-    ``foreachBatch`` is at-least-once, both writes are keyed by the
-    deterministic batch id and overwrite — a replayed batch rewrites
-    itself byte-identically and reads only state ids < its own.
+    Exactly-once across restarts by ``BatchDirs``' batch-keyed
+    overwrite: a replayed batch rewrites itself byte-identically and
+    reads only state ids < its own.
     """
-    import json
-    import os
-
     from jimmy_spark.operators.stjoin import contact_join_incremental
+
+    out, state = BatchDirs(out_dir), BatchDirs(state_dir)
 
     def _process(batch_df, batch_id: int) -> None:
         pings = batch_df.select("entity_id", "seq", "ts", "lat_e7", "lon_e7")
@@ -538,20 +418,12 @@ def run_contact_stream(
             old = spark.read.parquet(*keep)
         else:
             old = spark.createDataFrame([], PINGS_SCHEMA)
-        delta = contact_join_incremental(pings, old, d=d, tau=tau)
-        delta.write.mode("overwrite").parquet(f"{out_dir}/b={batch_id}")
-        pings.write.mode("overwrite").parquet(f"{state_dir}/b={batch_id}")
-        with open(f"{state_dir}/b={batch_id}/_max_ts.json", "w") as f:
+        out.write(batch_id, contact_join_incremental(pings, old, d=d, tau=tau))
+        state.write(batch_id, pings)
+        with open(f"{state.path(batch_id)}/_max_ts.json", "w") as f:
             json.dump({"max_ep": int(bounds["hi"])}, f)
 
-    reader = spark.readStream.schema(PINGS_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(pings_dir)
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        spark, pings_dir, PINGS_SCHEMA, checkpoint_dir, _process,
+        max_files_per_trigger,
     )
-    q.awaitTermination()

@@ -23,50 +23,19 @@ unit instead of tiles:
 State is O(distinct values per group) — the information-theoretic
 minimum for exactness over unbounded streams; for the integer domains
 this engine carries (char counts, dwell seconds, fixed-point scores)
-that is the bounded-histogram regime. Idempotence: replays read state
-strictly below their own id and overwrite deterministically; compaction
-(latest-per-group rewrite) is observationally a no-op.
+that is the bounded-histogram regime. Idempotence (``BatchDirs``): replays
+read state strictly below their own id and overwrite deterministically;
+compaction (``BatchDirs.compact_latest``) is observationally a no-op.
 """
 
 from __future__ import annotations
 
-import os
 from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from jimmy_spark.operators import quantiles as qt
-
-
-def _state_ids(dir_: str, below: int | None = None) -> list[int]:
-    if not os.path.isdir(dir_):
-        return []
-    ids = [
-        int(e.split("=", 1)[1]) for e in os.listdir(dir_) if e.startswith("b=")
-    ]
-    if below is not None:
-        ids = [i for i in ids if i < below]
-    return sorted(ids)
-
-
-def _latest_per_group(
-    spark: SparkSession, dir_: str, ids: list[int], group_cols: Sequence[str]
-) -> DataFrame | None:
-    """Rows of the highest batch dir per group across the given ids —
-    every write carries a dirty group's COMPLETE rows, so the max id
-    per group owns them all. Explicit dir list: a replaying batch never
-    reads ids at-or-above its own half-written output."""
-    if not ids:
-        return None
-    df = spark.read.option("basePath", dir_).parquet(
-        *[f"{dir_}/b={i}" for i in ids]
-    )
-    w = Window.partitionBy(*group_cols)
-    return (
-        df.withColumn("_mb", F.max("b").over(w))
-        .filter(F.col("b") == F.col("_mb"))
-        .drop("b", "_mb")
-    )
+from jimmy_spark.streaming.state import BatchDirs, drain
 
 
 def latest_quantiles(
@@ -75,8 +44,8 @@ def latest_quantiles(
     """The current per-group quantile table (latest rows per group), or
     None before the first batch. Equal to batch ``group_quantiles`` over
     every row arrived so far."""
-    d = f"{out_dir}/quantiles"
-    return _latest_per_group(spark, d, _state_ids(d), group_cols)
+    q = BatchDirs(f"{out_dir}/quantiles")
+    return q.fold_latest(spark, group_cols, q.ids())
 
 
 def run_quantile_stream(
@@ -97,8 +66,8 @@ def run_quantile_stream(
     keyed overwrite under ``out_dir``), then return. Nothing new is a
     no-op."""
     gcols = list(group_cols)
-    hist_dir = f"{out_dir}/hist"
-    q_dir = f"{out_dir}/quantiles"
+    hist = BatchDirs(f"{out_dir}/hist")
+    q = BatchDirs(f"{out_dir}/quantiles")
 
     def _process(batch_df, batch_id: int) -> None:
         delta = (
@@ -107,9 +76,7 @@ def run_quantile_stream(
             .groupBy(*gcols, val_col)
             .agg(F.count(F.lit(1)).alias("n"))
         )
-        prev = _latest_per_group(
-            spark, hist_dir, _state_ids(hist_dir, below=batch_id), gcols
-        )
+        prev = hist.fold_latest(spark, gcols, hist.ids(below=batch_id))
         if prev is not None:
             dirty = delta.select(*gcols).distinct()
             carried = prev.join(dirty, gcols, "left_semi")
@@ -119,20 +86,13 @@ def run_quantile_stream(
                 .agg(F.sum("n").alias("n"))
             )
         delta = delta.persist()
-        delta.write.mode("overwrite").parquet(f"{hist_dir}/b={batch_id}")
-        qt.group_quantiles_from_counts(
-            delta, gcols, val_col, "n", qs=qs
-        ).write.mode("overwrite").parquet(f"{q_dir}/b={batch_id}")
+        hist.write(batch_id, delta)
+        q.write(
+            batch_id, qt.group_quantiles_from_counts(delta, gcols, val_col, "n", qs=qs)
+        )
         delta.unpersist()
 
-    reader = spark.readStream.schema(source_schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(src_dir)
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        spark, src_dir, source_schema, checkpoint_dir, _process,
+        max_files_per_trigger,
     )
-    q.awaitTermination()

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from jimmy_spark.operators.trajectory import GAP_S, JUMP_E7
+from jimmy_spark.streaming.state import BatchDirs, drain
 
 OUT_SCHEMA = (
     "entity_id long, seq long, ts timestamp_ntz, lat_e7 long, lon_e7 long, "
@@ -162,25 +163,17 @@ def run_match_stream(
     as a stateful aggregation — but the aggregation is per input row, so
     it runs inside ``foreachBatch`` instead: at-least-once replays are
     made idempotent by the deterministic batch-id-keyed overwrite
-    (``<out_dir>/b=<id>``), the proximity stream's discipline
-    (run_proximity_stream)."""
+    (``<out_dir>/b=<id>``, streaming/state.py ``BatchDirs``)."""
     from jimmy_spark.operators import mapmatch
 
     segs = spark.read.parquet(roads_path)
     d = int(d_max if d_max is not None else mapmatch.D_MAX)
+    out = BatchDirs(out_dir)
 
     def _process(batch_df, batch_id: int) -> None:
-        out = mapmatch.map_match(batch_df, segs, d_max=d)
-        out.write.mode("overwrite").parquet(f"{out_dir}/b={batch_id}")
+        out.write(batch_id, mapmatch.map_match(batch_df, segs, d_max=d))
 
-    reader = spark.readStream.schema(PING_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(pings_dir)
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        spark, pings_dir, PING_SCHEMA, checkpoint_dir, _process,
+        max_files_per_trigger,
     )
-    q.awaitTermination()

@@ -8,6 +8,7 @@ import pandas as pd
 import pytest
 
 from jimmy_spark.streaming import windows
+from jimmy_spark.streaming.state import BatchDirs
 
 SF_DIR = "/root/testdata/sf0.001"
 EVENTS = f"{SF_DIR}/events.parquet"
@@ -247,7 +248,7 @@ class TestProximityStream:
         )
         before = self._pairs(spark, out)
 
-        spatial.compact_pair_stream_state(spark, out, st)
+        spatial.compact_pair_stream_state(spark, out, st, cp)
         for d in (out, st):
             assert sum(1 for e in os.listdir(d) if e.startswith("b=")) == 1
         assert self._pairs(spark, out) == before
@@ -405,12 +406,12 @@ class TestHullStream:
         assert got == exp and len(exp) > 1
 
         # nothing new: no-op (no new batch dirs)
-        n_dirs = len(hulls._state_ids(out))
+        n_dirs = len(BatchDirs(out).ids())
         hulls.run_hull_stream(
             spark, str(src), ["zone_x", "zone_y"], self.SRC_SCHEMA, out, cp,
             max_files_per_trigger=1,
         )
-        assert len(hulls._state_ids(out)) == n_dirs
+        assert len(BatchDirs(out).ids()) == n_dirs
         assert self._footprints(spark, out) == exp
 
         # late arrivals fold in: a new file shifts exactly the zones it
@@ -645,8 +646,8 @@ class TestKeepBestCompaction:
     (including cross-compaction pairs: a new point must still pair with
     old compacted points), and an interrupted swap is repaired on the
     next read — the crash-safe swap is SHARED with the heat-tile lane
-    (raster._promote_compact / _recover_compact), whose crash-window
-    suite covers every interleaving."""
+    (streaming/state.py BatchDirs), whose crash-window suite covers
+    every interleaving."""
 
     NUM_ID = "CAST(substring(image_id, 5, 12) AS BIGINT)"
     D = 50_000
@@ -718,7 +719,7 @@ class TestKeepBestCompaction:
         n_pts = spark.read.parquet(f"{st}/points").count()
         n_edges = spark.read.parquet(f"{st}/edges").count()
 
-        spatial.compact_keep_best_state(spark, out, st)
+        spatial.compact_keep_best_state(spark, out, st, cp)
 
         for d in (out, f"{st}/points", f"{st}/edges"):
             assert n_dirs(d) == 1, d
@@ -836,7 +837,7 @@ class TestHeatTileStream:
         # dirty-only writes: each batch dir's tile set is exactly the tile
         # set of ONE wave's own points (order-independent bijection) — no
         # batch ever rewrites the world
-        ids = sraster._state_ids(f"{out}/counts")
+        ids = BatchDirs(f"{out}/counts").ids()
         assert len(ids) == 3
         dir_sets = []
         for i in ids:
@@ -856,12 +857,12 @@ class TestHeatTileStream:
             spark, str(src), self.SRC_SCHEMA, out, cp, zoom=self.ZOOM,
             max_files_per_trigger=1,
         )
-        assert sraster._state_ids(f"{out}/counts") == ids
+        assert BatchDirs(f"{out}/counts").ids() == ids
 
         # compaction: observationally a no-op, state folded to one dir
-        sraster.compact_state(spark, out)
-        assert len(sraster._state_ids(f"{out}/counts")) == 1
-        assert len(sraster._state_ids(f"{out}/tiles")) == 1
+        sraster.compact_state(spark, out, cp)
+        assert len(BatchDirs(f"{out}/counts").ids()) == 1
+        assert len(BatchDirs(f"{out}/tiles").ids()) == 1
         assert self._tile_bytes(sraster.latest_heat_tiles(spark, out)) == exp
 
 
@@ -920,7 +921,7 @@ class TestQuantileStream:
 
         # dirty-only writes: each batch dir's group set equals exactly
         # one wave's own group set (order-independent bijection)
-        ids = sstats._state_ids(f"{out}/hist")
+        ids = BatchDirs(f"{out}/hist").ids()
         assert len(ids) == 3
         dir_sets = [
             {
@@ -941,8 +942,8 @@ class TestQuantileStream:
         # histogram state is exact: folded latest == pandas histogram
         hist = {
             (r.g, r.v): r.n
-            for r in sstats._latest_per_group(
-                spark, f"{out}/hist", ids, ["g"]
+            for r in BatchDirs(f"{out}/hist").fold_latest(
+                spark, ["g"], ids
             ).collect()
         }
         exp_hist = {
@@ -956,7 +957,7 @@ class TestQuantileStream:
             spark, str(src), self.SRC_SCHEMA, ["g"], "v", out, cp,
             qs=self.QS, max_files_per_trigger=1,
         )
-        assert sstats._state_ids(f"{out}/hist") == ids
+        assert BatchDirs(f"{out}/hist").ids() == ids
 
 
 class TestCompactSwapRecovery:
@@ -964,7 +965,7 @@ class TestCompactSwapRecovery:
     (r6 fix: the r5 order deleted b=<max> before renaming _compact into
     place — a crash in the gap silently dropped ALL accumulated tile
     counts). Each crash window is simulated at the directory level and
-    must repair through _recover_compact on the next read."""
+    must repair through BatchDirs on the next listing."""
 
     def _write_state(self, spark, dir_, ids):
         import os
@@ -976,42 +977,38 @@ class TestCompactSwapRecovery:
             ).write.mode("overwrite").parquet(f"{dir_}/b={i}")
 
     def _tiles(self, spark, dir_):
-        from jimmy_spark.streaming import raster as sraster
-
-        ids = sraster._state_ids(dir_)
-        df = sraster._latest_per_tile(spark, dir_, ids)
+        state = BatchDirs(dir_)
+        df = state.fold_latest(spark, ["x", "y"], state.ids())
         return {(r.x, r.y): r.cnt for r in df.collect()} if df is not None else {}
 
     def test_crash_windows_repair_to_full_state(self, spark, tmp_path):
         import os
         import shutil
 
-        from jimmy_spark.streaming import raster as sraster
-
         # crash AFTER tombstone rename, BEFORE promote: _compact complete
         d = str(tmp_path / "w1")
         self._write_state(spark, d, [0, 1, 2])
         full = self._tiles(spark, d)
-        cur = sraster._latest_per_tile(spark, d, [0, 1, 2])
+        cur = BatchDirs(d).fold_latest(spark, ["x", "y"], [0, 1, 2])
         cur.write.mode("overwrite").parquet(f"{d}/_compact")
         os.rename(f"{d}/b=2", f"{d}/_tombstone_b=2")
         assert self._tiles(spark, d) == full          # read-side repair
         # repair also completes the interrupted cleanup (r6: the fold
         # covers every older id; union-folded lanes would double-count
         # a surviving older dir)
-        assert sraster._state_ids(d) == [2]
+        assert BatchDirs(d).ids() == [2]
         assert not os.path.isdir(f"{d}/_compact")
 
         # crash AFTER promote, BEFORE older-dir/tombstone cleanup
         d = str(tmp_path / "w2")
         self._write_state(spark, d, [0, 1])
         full = self._tiles(spark, d)
-        cur = sraster._latest_per_tile(spark, d, [0, 1])
+        cur = BatchDirs(d).fold_latest(spark, ["x", "y"], [0, 1])
         cur.write.mode("overwrite").parquet(f"{d}/_compact")
         os.rename(f"{d}/b=1", f"{d}/_tombstone_b=1")
         os.rename(f"{d}/_compact", f"{d}/b=1")
         assert self._tiles(spark, d) == full
-        assert sraster._state_ids(d) == [1]
+        assert BatchDirs(d).ids() == [1]
         assert not any(
             e.startswith("_tombstone") for e in os.listdir(d)
         )
@@ -1020,23 +1017,219 @@ class TestCompactSwapRecovery:
         d = str(tmp_path / "w3")
         self._write_state(spark, d, [0, 1])
         full = self._tiles(spark, d)
-        cur = sraster._latest_per_tile(spark, d, [0, 1])
+        cur = BatchDirs(d).fold_latest(spark, ["x", "y"], [0, 1])
         cur.write.mode("overwrite").parquet(f"{d}/_compact")
         os.remove(f"{d}/_compact/_SUCCESS")
         os.rename(f"{d}/b=1", f"{d}/_tombstone_b=1")
         assert self._tiles(spark, d) == full
-        assert sraster._state_ids(d) == [0, 1]
+        assert BatchDirs(d).ids() == [0, 1]
 
         # the happy path still folds to one dir with identical state
         d = str(tmp_path / "w4")
         self._write_state(spark, f"{d}/counts", [0, 1, 2])
         self._write_state(spark, f"{d}/tiles", [0, 1, 2])
         full = self._tiles(spark, f"{d}/counts")
-        sraster.compact_state(spark, d)
-        assert sraster._state_ids(f"{d}/counts") == [2]
+        for sub in ("counts", "tiles"):
+            BatchDirs(f"{d}/{sub}").compact_latest(spark, ["x", "y"])
+        assert BatchDirs(f"{d}/counts").ids() == [2]
         assert self._tiles(spark, f"{d}/counts") == full
         leftovers = [
             e for e in os.listdir(f"{d}/counts") if e.startswith("_")
         ]
         assert leftovers == []
         shutil.rmtree(d)
+
+
+
+def _box_points(k: int, n: int = 100, box: int = 200_000) -> pd.DataFrame:
+    """Arrival ``k``: ``n`` seeded points in a ``box``-wide e7 square,
+    dense enough that a 20k-e7 distance join finds pairs in every wave."""
+    import numpy as np
+
+    rng = np.random.default_rng(100 + k)
+    return pd.DataFrame({
+        "image_id": [f"p{k:03d}_{i:03d}" for i in range(n)],
+        "lat_e7": rng.integers(0, box, n),
+        "lon_e7": rng.integers(0, box, n),
+    })
+
+
+def _tree_bytes(*dirs) -> dict:
+    """Relative path -> file bytes for every file under ``dirs``."""
+    import os
+
+    got = {}
+    for top in dirs:
+        for root, _, files in os.walk(top):
+            for f in files:
+                p = os.path.join(root, f)
+                with open(p, "rb") as fh:
+                    got[os.path.relpath(p, os.path.dirname(top))] = fh.read()
+    return got
+
+
+class TestBatchDirsGuards:
+    """The three ways a drain or a compaction could corrupt batch-keyed
+    state, each refused or repaired by BatchDirs (streaming/state.py)."""
+
+    D = 20_000
+
+    @staticmethod
+    def _pairs(spark, out):
+        rows = spark.read.parquet(f"{out}/b=*").collect()
+        return [(r.a_id, r.b_id, r.dist2) for r in rows]
+
+    def test_drain_repairs_pair_log_crash_window(self, spark, tmp_path):
+        """A compaction of the pair log that crashed after promoting the
+        fold into b=<max> but before deleting the older dirs leaves every
+        older pair twice under the b=* glob. The next drain repairs the
+        log before it writes, so each pair is there exactly once."""
+        import os
+
+        from jimmy_spark.operators import distjoin
+        from jimmy_spark.streaming import spatial
+
+        src = tmp_path / "pts"
+        src.mkdir()
+        out, st, cp = (str(tmp_path / n) for n in ("pairs", "state", "cp"))
+        for k in range(2):
+            _box_points(k).to_parquet(src / f"a{k}.parquet")
+        spatial.run_proximity_stream(
+            spark, str(src), self.D, out, st, cp, max_files_per_trigger=1
+        )
+        assert BatchDirs(out).ids() == [0, 1]
+        assert spark.read.parquet(f"{out}/b=0").count() > 0
+
+        # the crash window: fold written and promoted, older dir and
+        # tombstone not yet deleted
+        spark.read.parquet(f"{out}/b=0", f"{out}/b=1").write.parquet(
+            f"{out}/_compact"
+        )
+        os.rename(f"{out}/b=1", f"{out}/_tombstone_b=1")
+        os.rename(f"{out}/_compact", f"{out}/b=1")
+
+        _box_points(2).to_parquet(src / "a2.parquet")
+        spatial.run_proximity_stream(spark, str(src), self.D, out, st, cp)
+
+        got = self._pairs(spark, out)
+        full = spark.createDataFrame(
+            pd.concat([_box_points(k) for k in range(3)], ignore_index=True)
+        )
+        exp = {
+            (r.a_id, r.b_id, r.dist2)
+            for r in distjoin.distance_join_grid(full, d=self.D).collect()
+        }
+        assert len(got) == len(set(got)) and set(got) == exp
+        assert not any(e.startswith("_") for e in os.listdir(out))
+
+    def test_compaction_refuses_uncommitted_batch(self, spark, tmp_path):
+        """A planned batch without a commit is replayed on restart; the
+        three compactions raise before touching any state dir."""
+        import os
+
+        import pytest
+
+        from jimmy_spark.streaming import raster as sraster, spatial
+
+        src = tmp_path / "pts"
+        src.mkdir()
+        out, st, cp = (str(tmp_path / n) for n in ("pairs", "state", "cp"))
+        for k in range(2):
+            _box_points(k, n=40).to_parquet(src / f"a{k}.parquet")
+        spatial.run_proximity_stream(
+            spark, str(src), self.D, out, st, cp, max_files_per_trigger=1
+        )
+        os.remove(f"{cp}/commits/1")
+        before = _tree_bytes(out, st)
+
+        with pytest.raises(RuntimeError, match="not committed"):
+            spatial.compact_pair_stream_state(spark, out, st, cp)
+        with pytest.raises(RuntimeError, match="not committed"):
+            spatial.compact_keep_best_state(spark, out, st, cp)
+        with pytest.raises(RuntimeError, match="not committed"):
+            sraster.compact_state(spark, out, cp)
+        assert _tree_bytes(out, st) == before
+        assert BatchDirs(out).ids() == [0, 1]
+
+    def test_swap_refuses_partial_fold(self, tmp_path):
+        """A fold of a subset of the ids would let a later repair delete
+        unfolded dirs; the swap raises before any write or rename. The
+        folded frame is never touched, so no Spark job starts."""
+        import os
+
+        import pytest
+
+        d = tmp_path / "state"
+        for i in range(3):
+            (d / f"b={i}").mkdir(parents=True)
+            (d / f"b={i}" / "part-0.parquet").write_bytes(b"%d" % i)
+        before = _tree_bytes(str(d))
+        state = BatchDirs(str(d))
+        for subset in ([0, 1], [1, 2], [0, 2], [2]):
+            with pytest.raises(ValueError, match="not the full id set"):
+                state._swap(subset, None)
+        assert _tree_bytes(str(d)) == before
+        assert sorted(os.listdir(d)) == ["b=0", "b=1", "b=2"]
+
+
+class TestDrainJobCount:
+    """Spark jobs per drain, pinned for the two lanes the online loop
+    runs: one heat-tile drain and one proximity drain of a second
+    arrival over prior state. Jobs are counted from the status tracker
+    under each query's job group (its run id), so a refactor that adds a
+    count, a collect or a second read to a micro-batch fails here."""
+
+    HEAT_JOBS = 10
+    PROX_JOBS = 4
+
+    def test_second_arrival_job_counts(self, spark, tmp_path):
+        from pyspark.sql.streaming import StreamingQueryListener
+
+        from jimmy_spark.streaming import raster as sraster, spatial
+
+        class RunIds(StreamingQueryListener):
+            def __init__(self):
+                self.ids = []
+
+            def onQueryStarted(self, event):
+                self.ids.append(str(event.runId))
+
+            def onQueryProgress(self, event):
+                pass
+
+            def onQueryIdle(self, event):
+                pass
+
+            def onQueryTerminated(self, event):
+                pass
+
+        src = tmp_path / "pts"
+        src.mkdir()
+        heat, prox, st, cp = (
+            str(tmp_path / n) for n in ("heat", "prox", "prox_state", "cp")
+        )
+
+        def drains():
+            sraster.run_heat_tile_stream(
+                spark, str(src), spatial.POINTS_SCHEMA, heat, f"{cp}/heat",
+                zoom=8,
+            )
+            spatial.run_proximity_stream(
+                spark, str(src), 20_000, prox, st, f"{cp}/prox"
+            )
+
+        _box_points(0, box=1_000_000).to_parquet(src / "a0.parquet")
+        drains()
+        _box_points(1, box=1_000_000).to_parquet(src / "a1.parquet")
+        runs = RunIds()
+        spark.streams.addListener(runs)
+        try:
+            drains()
+        finally:
+            spark.streams.removeListener(runs)
+        tracker = spark.sparkContext.statusTracker()
+        counts = [len(tracker.getJobIdsForGroup(r)) for r in runs.ids]
+        assert counts == [self.HEAT_JOBS, self.PROX_JOBS]
+        # the second arrival really met prior state on both lanes
+        assert spark.read.parquet(f"{prox}/b=1").count() > 0
+        assert spark.read.parquet(f"{heat}/counts/b=1").count() > 0
