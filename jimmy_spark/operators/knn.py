@@ -6,11 +6,13 @@ Reference analogue: the Evernote fuzzy-title join (SURVEY §2.4,
 scalable shape is *blocking key + candidate join + exact score sort* —
 here the blocking key is the hex cell and the score is planar distance.
 
-Density-directed ring expansion, one candidate pass (v3):
+Density-directed ring expansion, one grid pass and one candidate join:
 
-1. One groupBy over the points table yields per-cell counts (at 10^12 rows
-   this is the coarse density grid — computed once, reused across query
-   batches; use a coarser resolution there so it stays driver-broadcastable).
+1. One groupBy(cell).count() over the points, collected to the driver,
+   is the only pre-pass (``_grid``). It is the density grid, its sum is
+   the point count N, and it drives the coarsening ladder: a rung whose
+   grid exceeds MAX_DRIVER_CELLS is cut at MAX_DRIVER_CELLS + 1 rows and
+   the next coarser resolution is tried, so the driver never holds more.
 2. Per query (vectorized NumPy, driver-side): walk cell-center distances
    outward (geometric radius doubling over the occupied-cell arrays) until
    the cumulative count reaches k at center distance D. Every counted point
@@ -18,14 +20,22 @@ Density-directed ring expansion, one candidate pass (v3):
    k-th distance d_k <= d_bound. The candidate set = occupied cells with
    center distance <= d_bound + s — it provably contains *every* point
    within d_k. This is ring expansion with the ring radius read off the
-   density grid instead of discovered by repeated joins.
-3. ONE broadcast join of the (query_id, cell) candidate list against the
-   cell-keyed points table, exact integer dist2, window row_number over
-   (dist2, id) <= k. No iteration, no recomputation.
-4. Safety rails: a query whose d_bound approaches the int64-exact envelope
-   (deltas ~1.4e9) routes to a DECIMAL brute-force pass (margin-pruned,
-   bucketed); a query that somehow collects fewer than min(k, N) rows
-   (cannot happen by the bound above — defensive) does too.
+   density grid instead of discovered by repeated joins. The query's exact
+   candidate-row count n_cand is the sum of its chosen cells' counts.
+3. ONE broadcast join of the (query, cell) candidate list against the
+   cell-keyed points, exact integer dist2, window row_number over
+   (dist2, id) <= k. A query with n_cand >= 64·k first gets a sampled upper
+   bound on its k-th distance (the k-th dist2 within a deterministic 1/64
+   subsample), which prunes its rows before the window sort; only there
+   does the sample expect k rows, so only such queries pay for that pass.
+   The plan is returned unmaterialized: the caller's action runs it once
+   and nothing is left in the cache.
+4. Safety rails, decided on the driver: a query whose d_bound approaches
+   the int64-exact envelope (deltas ~1.4e9) routes to a DECIMAL
+   brute-force pass (margin-pruned, bucketed); so does a query with
+   n_cand < min(k, N). The join keeps every candidate row and the sampled
+   bound keeps >= k of them, so such a query's top-k would come back
+   short (cannot happen by the bound above — defensive).
 
 Determinism: ranking key is (dist2, image_id) — a total order; results are
 identical at any parallelism. Candidate dist2 fits int64 exactly (deltas
@@ -51,6 +61,42 @@ _INT64_SAFE_DELTA = 1_400_000_000.0
 # coarser density/blocking grid (hexgrid res 6 or 5) — correctness is
 # unaffected, the d_bound math just uses the coarser cell radius
 MAX_DRIVER_CELLS = 4_000_000
+# the sampled-bound prune ranks the rows whose id hashes to 0 mod this
+_SAMPLE_MOD = 64
+
+
+def _grid(
+    points: DataFrame, res: int, id_col: str
+) -> tuple[int, DataFrame, pd.DataFrame]:
+    """(res, cell-keyed points, density grid) from one aggregation per
+    ladder rung (res, 6, 5): the first rung whose grid fits
+    MAX_DRIVER_CELLS, else the last. Non-final rungs collect at most
+    MAX_DRIVER_CELLS + 1 rows. The points frame is returned lazy."""
+    from jimmy_spark.operators.cells import hex_cell_expr
+
+    ladder = list(dict.fromkeys([res, min(res, 6), min(res, 5)]))
+    for r in ladder:
+        pts = points.select(
+            F.col(id_col),
+            F.col("lat_e7").alias("p_lat"),
+            F.col("lon_e7").alias("p_lon"),
+            hex_cell_expr(F.col("lat_e7"), F.col("lon_e7"), r).alias("cell"),
+        )
+        grid = pts.groupBy("cell").agg(F.count("*").alias("cnt"))
+        if r != ladder[-1]:
+            grid = grid.limit(MAX_DRIVER_CELLS + 1)
+        counts_pdf = grid.toPandas()
+        if len(counts_pdf) <= MAX_DRIVER_CELLS:
+            break
+    return r, pts, counts_pdf
+
+
+def _dist2(df: DataFrame) -> DataFrame:
+    return df.withColumn(
+        "dist2",
+        (F.col("p_lat") - F.col("q_lat")) * (F.col("p_lat") - F.col("q_lat"))
+        + (F.col("p_lon") - F.col("q_lon")) * (F.col("p_lon") - F.col("q_lon")),
+    )
 
 
 def _candidate_cells(
@@ -129,124 +175,75 @@ def knn_join(
     """points(id, lat_e7, lon_e7) x queries(query_id, lat_e7, lon_e7, k)
     -> (query_id, rank, image_id), exact planar kNN."""
     spark = points.sparkSession
-    from jimmy_spark.operators.cells import hex_cell_expr
-
-    # Auto-coarsen the blocking grid if the occupied-cell count at ``res``
-    # would strain the driver (one pass, three approx sketches).
-    lat, lon = F.col("lat_e7"), F.col("lon_e7")
-    ladder = list(dict.fromkeys([res, min(res, 6), min(res, 5)]))
-    cards = points.agg(
-        *[
-            F.approx_count_distinct(hex_cell_expr(lat, lon, r)).alias(f"r{r}")
-            for r in ladder
-        ]
-    ).first()
-    res = next(
-        (r for r in ladder if cards[f"r{r}"] <= MAX_DRIVER_CELLS), ladder[-1]
-    )
-
-    pts = points.select(
-        F.col(id_col),
-        F.col("lat_e7").alias("p_lat"),
-        F.col("lon_e7").alias("p_lon"),
-        hex_cell_expr(F.col("lat_e7"), F.col("lon_e7"), res).alias("cell"),
-    ).persist()
-    n_total = pts.count()
-
-    qmeta = spark.createDataFrame(
-        queries_pdf[["query_id", "lat_e7", "lon_e7", "k"]]
-    ).select(
-        "query_id",
-        F.col("lat_e7").alias("q_lat"),
-        F.col("lon_e7").alias("q_lon"),
-        "k",
-    )
-    counts_pdf = pts.groupBy("cell").agg(F.count("*").alias("cnt")).toPandas()
+    res, pts, counts_pdf = _grid(points, res, id_col)
+    n_total = int(counts_pdf["cnt"].sum())
     cand_pdf, overflow = _candidate_cells(queries_pdf, counts_pdf, res)
 
-    # Results stay DISTRIBUTED end to end: the candidate top-k and the
-    # brute-force path are unioned Spark-side; only the per-query
-    # candidate-cell planning (bounded by MAX_DRIVER_CELLS) and the
-    # per-query completeness counts (one row per query) touch the driver.
+    qmeta_pdf = pd.DataFrame(
+        {
+            "query_id": queries_pdf["query_id"].astype(str),
+            "q_lat": queries_pdf["lat_e7"],
+            "q_lon": queries_pdf["lon_e7"],
+            "k": queries_pdf["k"],
+        }
+    )
+    # completeness and pruning decided on the driver from the grid counts:
+    # every point of a chosen cell joins, so n_cand is exact (module doc, 4)
+    k_of = dict(zip(qmeta_pdf["query_id"], qmeta_pdf["k"]))
+    n_cand = cand_pdf.merge(counts_pdf, on="cell").groupby("query_id")["cnt"].sum()
+    short = [
+        q
+        for q, k in k_of.items()
+        if q not in overflow and n_cand.get(q, 0) < min(k, n_total)
+    ]
+    dense = [q for q, n in n_cand.items() if n >= _SAMPLE_MOD * k_of[q]]
+    overflow = list(overflow) + short
+    cand_pdf = cand_pdf[~cand_pdf["query_id"].isin(short)]
+
+    # Results stay DISTRIBUTED and lazy: the candidate top-k and the
+    # brute-force path are unioned Spark-side and run by the caller's
+    # action; only the candidate-cell planning (bounded by
+    # MAX_DRIVER_CELLS) touches the driver.
     result_dfs: list[DataFrame] = []
     if len(cand_pdf):
-        # _cand() is instantiated twice (sampled-bound pass + final rank).
-        # Persisting it instead was MEASURED SLOWER (bench, 300 queries on
-        # 4M rows @local[24]: 18.7s persisted vs 12.8s recomputed, cold):
-        # the 1/64 sample filter pushes below the broadcast join so pass 1
-        # materializes almost nothing, while caching pays for writing the
-        # full multi-million-row candidate set.
-        def _cand() -> DataFrame:
-            return (
-                F.broadcast(spark.createDataFrame(cand_pdf))
-                .join(pts, "cell")
-                .join(F.broadcast(qmeta), "query_id")
-                .withColumn(
-                    "dist2",
-                    (F.col("p_lat") - F.col("q_lat"))
-                    * (F.col("p_lat") - F.col("q_lat"))
-                    + (F.col("p_lon") - F.col("q_lon"))
-                    * (F.col("p_lon") - F.col("q_lon")),
-                )
-                .select("query_id", "k", id_col, "dist2")
-            )
-
-        # Dense hot cells can put 10^5-10^6 candidates behind one query and
-        # the final per-query window sort would dominate. Tighten with a
-        # *sampled upper bound*: the k-th distance within a deterministic
-        # 1/64 subsample is >= the true k-th distance, so filtering
-        # dist2 <= bound before ranking discards no true top-k row — exact
-        # regardless of sample quality; queries with < k sampled candidates
-        # simply get no bound. Everything stays JVM-side.
+        # query coordinates ride in the one broadcast candidate list
+        cand = _dist2(
+            F.broadcast(spark.createDataFrame(cand_pdf.merge(qmeta_pdf, on="query_id")))
+            .join(pts, "cell")
+        ).select("query_id", "k", id_col, "dist2")
         w = Window.partitionBy("query_id").orderBy("dist2", id_col)
-        sample = _cand().filter(F.pmod(F.xxhash64(F.col(id_col)), F.lit(64)) == 0)
-        kth = (
-            sample.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") == F.col("k"))
-            .select("query_id", F.col("dist2").alias("bound"))
-        )
-        topk = (
-            _cand()
-            .join(F.broadcast(kth), "query_id", "left")
-            .filter(
+        if dense:
+            # Dense hot cells can put 10^5-10^6 candidates behind one query
+            # and the per-query window sort would dominate. The k-th
+            # distance within a deterministic 1/_SAMPLE_MOD subsample is
+            # >= the true k-th distance, so filtering dist2 <= bound before
+            # ranking discards no true top-k row and keeps >= k rows.
+            # cand then runs twice; persisting it was MEASURED SLOWER (bench,
+            # 300 queries on 4M rows @local[24]: 18.7s vs 12.8s, cold): the
+            # sample filter pushes below the broadcast join, while caching
+            # writes the full multi-million-row candidate set.
+            sample = cand.filter(
+                F.col("query_id").isin(dense)
+                & (F.pmod(F.xxhash64(F.col(id_col)), F.lit(_SAMPLE_MOD)) == 0)
+            )
+            kth = (
+                sample.withColumn("rank", F.row_number().over(w))
+                .filter(F.col("rank") == F.col("k"))
+                .select("query_id", F.col("dist2").alias("bound"))
+            )
+            cand = cand.join(F.broadcast(kth), "query_id", "left").filter(
                 F.col("bound").isNull() | (F.col("dist2") <= F.col("bound"))
             )
-            .withColumn("rank", F.row_number().over(w))
+        result_dfs.append(
+            cand.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= F.col("k"))
             .select("query_id", "rank", id_col)
-            # eager localCheckpoint: materializes the (result-sized) top-k
-            # NOW and truncates its lineage, so (a) unpersisting pts below
-            # cannot force a recompute and (b) nothing stays pinned in the
-            # cache after the caller drops the DataFrame (GC-cleaned) —
-            # a plain persist() leaked one cache entry per knn_join call
-            .localCheckpoint(eager=True)
         )
-        # defensive completeness check (the d_bound argument guarantees it):
-        # one count row per query through the driver
-        got_n = {
-            r.query_id: r.n
-            for r in topk.groupBy("query_id").agg(F.count("*").alias("n")).collect()
-        }
-        k_of = {str(r.query_id): int(r.k) for r in queries_pdf.itertuples()}
-        short = [
-            q
-            for q in cand_pdf["query_id"].unique()
-            if got_n.get(q, 0) < min(k_of[q], n_total)
-        ]
-        if short:
-            overflow = list(overflow) + short
-            topk = topk.filter(~F.col("query_id").isin(short))
-        result_dfs.append(topk)
 
     if overflow:
-        # materialize before pts.unpersist() below — the brute-force plan
-        # references pts, and a lazy return would recompute the full
-        # points lineage uncached on every downstream action
-        result_dfs.append(
-            _brute_force(pts, qmeta, overflow, id_col).localCheckpoint(eager=True)
-        )
+        qmeta = spark.createDataFrame(qmeta_pdf)
+        result_dfs.append(_brute_force(pts, qmeta, overflow, id_col))
 
-    pts.unpersist()
     if not result_dfs:
         return spark.createDataFrame([], f"query_id string, rank int, {id_col} string")
     out = result_dfs[0]
@@ -284,27 +281,9 @@ def knn_join_big(
     re-route defensively).
     """
     spark = points.sparkSession
-    from jimmy_spark.operators.cells import hex_cell_expr
-
-    lat, lon = F.col("lat_e7"), F.col("lon_e7")
-    ladder = list(dict.fromkeys([res, min(res, 6), min(res, 5)]))
-    cards = points.agg(
-        *[
-            F.approx_count_distinct(hex_cell_expr(lat, lon, r)).alias(f"r{r}")
-            for r in ladder
-        ]
-    ).first()
-    res = next(
-        (r for r in ladder if cards[f"r{r}"] <= MAX_DRIVER_CELLS), ladder[-1]
-    )
-
-    pts = points.select(
-        F.col(id_col),
-        F.col("lat_e7").alias("p_lat"),
-        F.col("lon_e7").alias("p_lon"),
-        hex_cell_expr(F.col("lat_e7"), F.col("lon_e7"), res).alias("cell"),
-    ).persist()
-    n_total = pts.count()
+    res, pts, counts_pdf = _grid(points, res, id_col)
+    pts = pts.persist()
+    n_total = int(counts_pdf["cnt"].sum())
 
     qcols = queries.select("query_id", "lat_e7", "lon_e7", "k")
     qmeta = qcols.select(
@@ -313,14 +292,12 @@ def knn_join_big(
         F.col("lon_e7").alias("q_lon"),
         "k",
     )
-    counts_pdf = pts.groupBy("cell").agg(F.count("*").alias("cnt")).toPandas()
     grid_bc = spark.sparkContext.broadcast(counts_pdf)
-    res_now = res
 
     def plan(batches):
         grid = grid_bc.value
         for pdf in batches:
-            cand, overflow = _candidate_cells(pdf, grid, res_now)
+            cand, overflow = _candidate_cells(pdf, grid, res)
             if overflow:
                 cand = cand.assign(cell=cand["cell"].astype("Int64"))
                 cand = pd.concat(
@@ -340,10 +317,10 @@ def knn_join_big(
             yield cand
 
     def _cand_df() -> DataFrame:
-        # re-instantiated per pass like knn_join's _cand(): planning is a
-        # bounded strip walk per query — cheaper than persisting the
-        # (query x cells) candidate stream (measured on the driver-side
-        # twin; same trade here)
+        # re-instantiated per pass like knn_join's candidate frame:
+        # planning is a bounded strip walk per query — cheaper than
+        # persisting the (query x cells) candidate stream (measured on the
+        # driver-side twin; same trade here)
         return qcols.mapInPandas(plan, "query_id string, cell long")
 
     overflow_ids = [
@@ -353,24 +330,18 @@ def knn_join_big(
     ]
 
     def _scored() -> DataFrame:
-        return (
+        return _dist2(
             _cand_df()
             .filter(F.col("cell").isNotNull())
             .join(pts, "cell")
             .join(qmeta, "query_id")
-            .withColumn(
-                "dist2",
-                (F.col("p_lat") - F.col("q_lat"))
-                * (F.col("p_lat") - F.col("q_lat"))
-                + (F.col("p_lon") - F.col("q_lon"))
-                * (F.col("p_lon") - F.col("q_lon")),
-            )
-            .select("query_id", "k", id_col, "dist2")
-        )
+        ).select("query_id", "k", id_col, "dist2")
 
     result_dfs: list[DataFrame] = []
     w = Window.partitionBy("query_id").orderBy("dist2", id_col)
-    sample = _scored().filter(F.pmod(F.xxhash64(F.col(id_col)), F.lit(64)) == 0)
+    sample = _scored().filter(
+        F.pmod(F.xxhash64(F.col(id_col)), F.lit(_SAMPLE_MOD)) == 0
+    )
     kth = (
         sample.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") == F.col("k"))

@@ -8,6 +8,7 @@ ring-expansion completeness bound.
 from __future__ import annotations
 
 import duckdb
+import numpy as np
 import pyarrow.parquet as pq
 import pytest
 
@@ -138,3 +139,97 @@ def test_knn_big_partitioned_queries(spark, points, t1_dir):
         for r in knn.knn_join_big(points, qdf.repartition(11)).collect()
     }
     assert a == b
+
+
+def _oracle(points, t1_dir, view):
+    duckdb.register(view, points.toPandas())
+    sql = knn.duckdb_knn_sql(
+        f"SELECT image_id, lat_e7, lon_e7 FROM {view}",
+        f"{t1_dir}/knn_queries.parquet",
+    )
+    return {(r[0], r[1], r[2]) for r in duckdb.sql(sql).fetchall()}
+
+
+def _rows(df):
+    return {(r.query_id, r.rank, r.image_id) for r in df.collect()}
+
+
+def _spy_brute_force(monkeypatch):
+    """Record the query ids each ``_brute_force`` call receives."""
+    routed: list[str] = []
+    real = knn._brute_force
+
+    def spy(pts, qmeta, qids, id_col):
+        routed.extend(qids)
+        return real(pts, qmeta, qids, id_col)
+
+    monkeypatch.setattr(knn, "_brute_force", spy)
+    return routed
+
+
+def test_knn_brute_force_path_exact(spark, points, t1_dir, monkeypatch):
+    """With the int64 envelope shrunk to nothing every query overflows,
+    so the whole answer comes from the DECIMAL brute-force pass."""
+    monkeypatch.setattr(knn, "_INT64_SAFE_DELTA", 0.0)
+    routed = _spy_brute_force(monkeypatch)
+    queries_pdf = pq.read_table(f"{t1_dir}/knn_queries.parquet").to_pandas()
+    got = _rows(knn.knn_join(points, queries_pdf))
+    assert sorted(routed) == sorted(queries_pdf["query_id"])
+    assert got == _oracle(points, t1_dir, "knn_pts_brute")
+
+
+def test_knn_short_candidate_set_is_rerouted(spark, points, t1_dir, monkeypatch):
+    """A query whose candidate cells hold fewer than k points (here: its
+    nearest chosen cell dropped from the plan) is rerouted to the
+    brute-force pass on the driver, and the output stays oracle-exact."""
+    from jimmy_spark.functions import hexgrid
+
+    queries_pdf = pq.read_table(f"{t1_dir}/knn_queries.parquet").to_pandas()
+    victim = queries_pdf[queries_pdf["k"] > 1].iloc[0]
+    real = knn._candidate_cells
+    left = {}
+
+    def drop_nearest(q_pdf, counts_pdf, res):
+        cand, overflow = real(q_pdf, counts_pdf, res)
+        mine = cand[cand["query_id"] == victim.query_id]
+        cy, cx = hexgrid.center(mine["cell"].to_numpy())
+        d = np.hypot(cy - victim.lat_e7, cx - victim.lon_e7)
+        cand = cand.drop(index=mine.index[int(np.argmin(d))])
+        kept = cand[cand["query_id"] == victim.query_id].merge(counts_pdf, on="cell")
+        left["n"] = int(kept["cnt"].sum())
+        return cand, overflow
+
+    monkeypatch.setattr(knn, "_candidate_cells", drop_nearest)
+    routed = _spy_brute_force(monkeypatch)
+    got = _rows(knn.knn_join(points, queries_pdf))
+    assert left["n"] < victim.k  # the dropped cell made the query short
+    assert routed == [victim.query_id]
+    assert got == _oracle(points, t1_dir, "knn_pts_reroute")
+
+
+def test_knn_sampled_bound_exact(spark, points, t1_dir, monkeypatch, capsys):
+    """A 1/2 sample makes every query with n_cand >= 2k run the sampled
+    bound pass; it prunes rows but never a true top-k row."""
+    monkeypatch.setattr(knn, "_SAMPLE_MOD", 2)
+    queries_pdf = pq.read_table(f"{t1_dir}/knn_queries.parquet").to_pandas()
+    out = knn.knn_join(points, queries_pdf)
+    out.explain(True)
+    assert "bound" in capsys.readouterr().out
+    assert _rows(out) == _oracle(points, t1_dir, "knn_pts_sampled")
+
+
+def test_knn_request_job_count_and_no_cache_entry(spark, points, t1_dir):
+    """One request on a cached frame: the grid aggregation (a bounded
+    collect) plus one candidate join, and no cache entry left behind.
+    Jobs are counted from the status tracker under a job group."""
+    queries_pdf = pq.read_table(f"{t1_dir}/knn_queries.parquet").to_pandas()
+    sc = spark.sparkContext
+    points.count()
+    cached = sc._jsc.getPersistentRDDs().size()
+    sc.setJobGroup("knn-request", "one knn_join request")
+    try:
+        knn.knn_join(points, queries_pdf).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("knn-request")) == 5
+    assert sc._jsc.getPersistentRDDs().size() == cached
