@@ -14,37 +14,35 @@ size is capped in session.py so batches of 64x48 BMP rows stay ~20 MB.
 
 Per-row pixel stats are deterministic (crc32 checksum, integer mean*1000)
 so downstream comparisons are exact. PSNR-vs-reference validation happens
-in tests (tests/test_decode.py) with the pinned codecs.
+in tests (tests/test_codecs.py) with the pinned codecs.
 """
 
 from __future__ import annotations
 
 import zlib
-from collections.abc import Iterator
+from collections.abc import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
 from jimmy_spark.codecs import decode_image
+from jimmy_spark.operators.multimodal import blob_columns
 
 DECODE_SCHEMA = (
     "image_id string, w int, h int, fmt string, caption string, phash long, "
     "ok boolean, error string, px_checksum long, px_mean_milli long, "
     "dec_w int, dec_h int"
 )
+DECODE_COLS = ("px_checksum", "px_mean_milli", "dec_w", "dec_h")
+_PASS = ("image_id", "w", "h", "fmt", "caption", "phash")
 
 
 def _decode_row(blob, fmt) -> tuple:
-    """Blob-determined decode tuple (dec_h, dec_w, crc, mean_milli, err)
-    — pure in (fmt, bytes), cacheable per task (the fused-map
-    discipline). The shape-vs-declared-(w, h) validation stays PER ROW in
-    the batch loop, so two rows sharing bytes but declaring different
-    sizes still get their own verdicts."""
+    """Per-row reference (dec_h, dec_w, crc, mean_milli, err) for the
+    registry's decode columns — pure in (fmt, bytes)."""
     try:
         arr = decode_image(blob, fmt)
-        # buffer-protocol crc (decoders return C-contiguous uint8):
-        # same value as crc32(tobytes()) minus the copy
         return (
             arr.shape[0], arr.shape[1], zlib.crc32(arr),
             int(arr.astype(np.int64).sum() * 1000 // arr.size), None,
@@ -53,42 +51,32 @@ def _decode_row(blob, fmt) -> tuple:
         return (0, 0, 0, 0, str(e))
 
 
-def _decode_batch(pdf: pd.DataFrame, cache: dict | None = None) -> pd.DataFrame:
-    from jimmy_spark.operators.multimodal import cached_blob_fn
-
-    n = len(pdf)
-    ok = np.zeros(n, dtype=bool)
-    err = np.full(n, None, dtype=object)
-    checksum = np.zeros(n, dtype=np.int64)
-    mean_milli = np.zeros(n, dtype=np.int64)
-    dec_w = np.zeros(n, dtype=np.int32)
-    dec_h = np.zeros(n, dtype=np.int32)
-    blobs = pdf["bytes"].to_numpy()
-    fmts = pdf["fmt"].to_numpy()
-    ws = pdf["w"].to_numpy()
-    hs = pdf["h"].to_numpy()
-    for i in range(n):
-        dh, dw, crc, mean, msg = cached_blob_fn(
-            cache, fmts[i], blobs[i], _decode_row
+def sized_columns(
+    pdf: pd.DataFrame, cols: Sequence[str], cache: dict | None = None
+) -> dict[str, np.ndarray]:
+    """``blob_columns`` (``cols`` including dec_w and dec_h) plus the
+    check that each row's decoded size equals its declared (w, h). The
+    check stays per row, outside the blob cache, so two rows sharing bytes
+    but declaring different sizes get their own verdicts. A mismatch keeps
+    dec_w/dec_h and zeroes the other columns."""
+    c = blob_columns(pdf, cols, cache)
+    ws, hs = pdf["w"].to_numpy(), pdf["h"].to_numpy()
+    bad = c["ok"] & ((c["dec_w"] != ws) | (c["dec_h"] != hs))
+    for i in np.flatnonzero(bad):
+        c["error"][i] = (
+            f"decoded size {c['dec_w'][i]}x{c['dec_h'][i]} != "
+            f"declared {ws[i]}x{hs[i]}"
         )
-        if msg is not None:
-            err[i] = msg
-            continue
-        dec_w[i], dec_h[i] = dw, dh
-        if dw != ws[i] or dh != hs[i]:
-            err[i] = f"decoded size {dw}x{dh} != declared {ws[i]}x{hs[i]}"
-            continue
-        checksum[i] = crc
-        mean_milli[i] = mean
-        ok[i] = True
-    out = pdf[["image_id", "w", "h", "fmt", "caption", "phash"]].copy()
-    out["ok"] = ok
-    out["error"] = err
-    out["px_checksum"] = checksum
-    out["px_mean_milli"] = mean_milli
-    out["dec_w"] = dec_w
-    out["dec_h"] = dec_h
-    return out
+    c["ok"] &= ~bad
+    for name in cols:
+        if name not in ("dec_w", "dec_h"):
+            c[name][bad] = 0
+    return c
+
+
+def _decode_batch(pdf: pd.DataFrame, cache: dict | None = None) -> pd.DataFrame:
+    kept = {k: pdf[k].to_numpy() for k in _PASS}
+    return pd.DataFrame({**kept, **sized_columns(pdf, DECODE_COLS, cache)})
 
 
 def decode_stage(images: DataFrame) -> DataFrame:
@@ -99,5 +87,4 @@ def decode_stage(images: DataFrame) -> DataFrame:
         for pdf in batches:
             yield _decode_batch(pdf, cache)
 
-    cols = ["image_id", "bytes", "w", "h", "fmt", "caption", "phash"]
-    return images.select(*cols).mapInPandas(gen, DECODE_SCHEMA)
+    return images.select(*_PASS, "bytes").mapInPandas(gen, DECODE_SCHEMA)

@@ -36,8 +36,10 @@ therefore bit-identical across hosts, partitionings, and batch sizes —
 the contract operators/raster.py idw_raster and multimodal._quality_ints
 already carry.
 
-Scale shape: fingerprints ride the same one-Arrow-crossing mapInPandas
-as image_features (decode once per image, no shuffle); the near-dup
+Scale shape: dhash and phash_dct are columns of the one blob kernel
+(multimodal.blob_features: one Arrow crossing, one decode per distinct
+blob, no shuffle), batched here as ``_dhash_batch`` / ``_phash_batch``
+over a stack of same-shape integer lumas; the near-dup
 lanes reuse the band-LSH Hamming kernel (operators/dedup.hamming_pairs
 — pigeonhole recall 1 up to nbands-1, exactly-once, codegen'd
 bit_count verify), so candidate volume stays linear in matches, never
@@ -46,19 +48,21 @@ quadratic in images.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from decimal import ROUND_HALF_EVEN, Decimal, getcontext
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from jimmy_spark.codecs import decode_image
+from jimmy_spark.operators.cells import with_georef
 from jimmy_spark.operators.dedup import DEFAULT_MAX_BUCKET, hamming_pairs
-
-FINGERPRINT_SCHEMA = (
-    "image_id string, ok boolean, error string, "
-    "ahash long, dhash long, phash_dct long"
+from jimmy_spark.operators.multimodal import (
+    _LUM_W,
+    _W64,
+    _ahash,
+    _quality_ints,
+    _resize_nn,
+    blob_features,
 )
 
 DCT_Q = 1 << 14  # fixed-point scale of the cosine table
@@ -105,16 +109,6 @@ def _int_luma(arr_u8: np.ndarray) -> np.ndarray:
     return (299 * a[:, :, 0] + 587 * a[:, :, 1] + 114 * a[:, :, 2]) // 1000
 
 
-def _resize_nn(arr: np.ndarray, w: int, h: int) -> np.ndarray:
-    sh, sw = arr.shape[:2]
-    ys = (np.arange(h) * sh) // h
-    xs = (np.arange(w) * sw) // w
-    return arr[ys][:, xs]
-
-
-_W64 = np.uint64(1) << np.arange(64, dtype=np.uint64)
-
-
 def _pack64(bits: np.ndarray) -> int:
     """LSB-first 64-bit pack (the multimodal._ahash bit order),
     vectorized: a uint64 dot against the power weights — distinct powers
@@ -151,8 +145,6 @@ def _phash(luma: np.ndarray) -> int:
 def _fingerprints_row(blob, fmt) -> tuple:
     """Blob-determined tuple (ok, error, ahash, dhash, phash_dct) — pure
     in (fmt, bytes), hence cacheable per task."""
-    from jimmy_spark.operators.multimodal import _LUM_W, _ahash
-
     try:
         arr = decode_image(blob, fmt)
         # aHash stays on the float luma the features kernel uses, so
@@ -164,22 +156,11 @@ def _fingerprints_row(blob, fmt) -> tuple:
         return (False, str(e), 0, 0, 0)
 
 
-def _int_luma_batch(u83: np.ndarray) -> np.ndarray:
-    """``_int_luma`` over a stack — int32 intermediates (luma <= 255000
-    < 2^31), exactly the int64 per-row values."""
-    a32 = u83.astype(np.int32)
-    return (
-        299 * a32[:, :, :, 0] + 587 * a32[:, :, :, 1] + 114 * a32[:, :, :, 2]
-    ) // 1000
-
-
 def _dhash_batch(luma3: np.ndarray) -> np.ndarray:
     """``_dhash`` over a stack of same-shape int lumas — pure integer
     order comparisons, exact by construction."""
-    k, sh, sw = luma3.shape
-    ys = (np.arange(8) * sh) // 8
-    xs = (np.arange(9) * sw) // 9
-    t3 = luma3[:, ys][:, :, xs]
+    k = luma3.shape[0]
+    t3 = _resize_nn(luma3, 9, 8, stacked=True)
     bits = (t3[:, :, 1:] > t3[:, :, :-1]).reshape(k, 64)
     return (bits.astype(np.uint64) @ _W64).view(np.int64)
 
@@ -198,10 +179,8 @@ def _phash_batch(luma3: np.ndarray) -> np.ndarray:
     matmul bit-for-bit (asserted batched == per-row in tests), at SIMD
     speed instead of the scalar integer loop. The median threshold stays
     pure integer."""
-    k, sh, sw = luma3.shape
-    ys = (np.arange(32) * sh) // 32
-    xs = (np.arange(32) * sw) // 32
-    t3 = luma3[:, ys][:, :, xs].astype(np.float64)
+    k = luma3.shape[0]
+    t3 = _resize_nn(luma3, 32, 32, stacked=True).astype(np.float64)
     u3 = (_COSF @ t3 @ _COSF.T).astype(np.int64)
     low = u3[:, :8, :8].reshape(k, 64)
     s = np.sort(low, axis=1)
@@ -210,91 +189,21 @@ def _phash_batch(luma3: np.ndarray) -> np.ndarray:
     return (bits.astype(np.uint64) @ _W64).view(np.int64)
 
 
-def _fingerprints_group(u83: np.ndarray, _extras: list) -> list[tuple]:
-    # aHash stays per-image on views of the batched luma (same NumPy
-    # routine, same layout -> bit-identical by construction; see
-    # multimodal._features_group); dhash/phash are integer-exact batched
-    from jimmy_spark.operators.multimodal import _LUM_W, _ahash
-
-    k = u83.shape[0]
-    luma3 = _int_luma_batch(u83)
-    dh = _dhash_batch(luma3)
-    ph = _phash_batch(luma3)
-    # the float aHash stays per-image from a fresh aligned astype (see
-    # multimodal._features_group: batched float stacks/matmuls drift the
-    # last ulp); the per-image ops are the per-row kernel's verbatim
-    return [
-        (True, None, _ahash(u83[j].astype(np.float64) @ _LUM_W), dh[j], ph[j])
-        for j in range(k)
-    ]
-
-
-def _fingerprints_decode(blob, fmt):
-    return decode_image(blob, fmt), None
-
-
-def _fingerprints_err(msg: str, _blob) -> tuple:
-    return (False, msg, 0, 0, 0)
-
-
-def _fingerprints_batch(pdf: pd.DataFrame, cache: dict | None = None) -> pd.DataFrame:
-    """Fingerprint kernel (module-level so twins/goldens can run it
-    locally; per-row-deterministic ops mean batch boundaries cannot
-    change values). Rows resolve through the per-task content-addressed
-    memo and misses compute shape-grouped — both bit-identical to the r5
-    per-row loop (asserted in tests)."""
-    from jimmy_spark.operators.multimodal import grouped_blob_rows
-
-    n = len(pdf)
-    cols = {
-        "image_id": pdf["image_id"].to_numpy(),
-        "ok": np.zeros(n, dtype=bool),
-        "error": np.full(n, None, dtype=object),
-        "ahash": np.zeros(n, dtype=np.int64),
-        "dhash": np.zeros(n, dtype=np.int64),
-        "phash_dct": np.zeros(n, dtype=np.int64),
-    }
-    rows = grouped_blob_rows(
-        pdf["bytes"].to_numpy(), pdf["fmt"].to_numpy(), cache,
-        _fingerprints_decode, _fingerprints_err, _fingerprints_group,
-    )
-    for i, tup in enumerate(rows):
-        (
-            cols["ok"][i], cols["error"][i],
-            cols["ahash"][i], cols["dhash"][i], cols["phash_dct"][i],
-        ) = tup
-    return pd.DataFrame(cols)
+FINGERPRINT_COLS = ("ahash", "dhash", "phash_dct")
 
 
 def image_fingerprints(images: DataFrame) -> DataFrame:
     """decode -> (ahash, dhash, phash_dct) in ONE Arrow crossing, error
-    rows isolated (ok=false) like operators/decode.py. Identical blobs pay
-    decode+hashing once per task (content-addressed cache)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict = {}
-        for pdf in batches:
-            yield _fingerprints_batch(pdf, cache)
-
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        gen, FINGERPRINT_SCHEMA
-    )
-
-
-CURATION_SCHEMA = (
-    "image_id string, ok boolean, error string, "
-    "ahash long, dhash long, phash_dct long, sharp_e3 long, clip_e3 long"
-)
+    rows isolated (ok=false) like operators/decode.py."""
+    return blob_features(images, FINGERPRINT_COLS, keep=("image_id",))
 
 
 def _curation_row(blob, fmt) -> tuple:
     """Blob-determined tuple (ok, error, ahash, dhash, phash_dct,
     sharp_e3, clip_e3, content_md5) — pure in (fmt, bytes), cacheable per
     task. md5 matches Spark's ``F.md5`` (lowercase hex over raw bytes)
-    and rides the same decode pass for the full-stage kernel below."""
+    and is set on error rows too."""
     import hashlib as _hl
-
-    from jimmy_spark.operators.multimodal import _LUM_W, _ahash, _quality_ints
 
     md5 = _hl.md5(blob).hexdigest() if blob is not None else None
     try:
@@ -311,151 +220,27 @@ def _curation_row(blob, fmt) -> tuple:
         return (False, str(e), 0, 0, 0, 0, 0, md5)
 
 
-def _curation_decode(blob, fmt):
-    import hashlib as _hl
-
-    md5 = _hl.md5(blob).hexdigest() if blob is not None else None
-    return decode_image(blob, fmt), md5
-
-
-def _curation_err(msg: str, blob) -> tuple:
-    import hashlib as _hl
-
-    md5 = _hl.md5(blob).hexdigest() if blob is not None else None
-    return (False, msg, 0, 0, 0, 0, 0, md5)
-
-
-def _curation_group(u83: np.ndarray, md5s: list) -> list[tuple]:
-    from jimmy_spark.operators.multimodal import (
-        _LUM_W,
-        _ahash,
-        _quality_ints_batch,
-    )
-
-    k = u83.shape[0]
-    luma3 = _int_luma_batch(u83)
-    dh = _dhash_batch(luma3)
-    ph = _phash_batch(luma3)
-    sharp, clip = _quality_ints_batch(u83)
-    # per-image float aHash from a fresh aligned astype — see
-    # multimodal._features_group for why
-    return [
-        (
-            True, None,
-            _ahash(u83[j].astype(np.float64) @ _LUM_W), dh[j], ph[j],
-            sharp[j], clip[j], md5s[j],
-        )
-        for j in range(k)
-    ]
-
-
-def _curation_rows(pdf: pd.DataFrame, cache: dict | None) -> list[tuple]:
-    """Shape-grouped, cache-resolved 8-tuples (_curation_row semantics)
-    for a batch — shared by ``curation_features`` and the full stage."""
-    from jimmy_spark.operators.multimodal import grouped_blob_rows
-
-    return grouped_blob_rows(
-        pdf["bytes"].to_numpy(), pdf["fmt"].to_numpy(), cache,
-        _curation_decode, _curation_err, _curation_group,
-    )
-
-
-def curation_features(images: DataFrame) -> DataFrame:
-    """The curation ladder's feature stage in ONE decode: all three
-    perceptual hashes plus the exact-integer quality pair
-    (multimodal._quality_ints — variance-of-Laplacian sharpness,
-    clipped-pixel fraction). jobs/curate_job.py checkpoints this frame,
-    so the scene lane's hash choice (--scene-hash) is a column pick, not
-    a re-decode; shared columns are bit-identical to image_features /
-    image_fingerprints (asserted in tests/test_fingerprints.py).
-    Identical blobs pay the kernel once per task (content-addressed
-    cache, the fused-map discipline); misses compute shape-grouped."""
-
-    def _batch(pdf: pd.DataFrame, cache: dict) -> pd.DataFrame:
-        n = len(pdf)
-        cols = {
-            "image_id": pdf["image_id"].to_numpy(),
-            "ok": np.zeros(n, dtype=bool),
-            "error": np.full(n, None, dtype=object),
-            "ahash": np.zeros(n, dtype=np.int64),
-            "dhash": np.zeros(n, dtype=np.int64),
-            "phash_dct": np.zeros(n, dtype=np.int64),
-            "sharp_e3": np.zeros(n, dtype=np.int64),
-            "clip_e3": np.zeros(n, dtype=np.int64),
-        }
-        for i, tup in enumerate(_curation_rows(pdf, cache)):
-            (
-                cols["ok"][i], cols["error"][i],
-                cols["ahash"][i], cols["dhash"][i], cols["phash_dct"][i],
-                cols["sharp_e3"][i], cols["clip_e3"][i], _md5,
-            ) = tup
-        return pd.DataFrame(cols)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict = {}
-        for pdf in batches:
-            yield _batch(pdf, cache)
-
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        gen, CURATION_SCHEMA
-    )
-
-
-CURATION_FULL_SCHEMA = (
-    "image_id string, ok boolean, ahash long, dhash long, phash_dct long, "
-    "sharp_e3 long, clip_e3 long, lat_e7 long, lon_e7 long, "
-    "content_md5 string"
+CURATION_COLS = (
+    "ahash", "dhash", "phash_dct", "sharp_e3", "clip_e3", "content_md5",
 )
 
 
 def curation_features_full(images: DataFrame) -> DataFrame:
     """The curate job's ENTIRE checkpointed feature stage in one Arrow
-    crossing and zero shuffle: ``curation_features`` columns + georef
-    (exact-integer latlon_e7_np — bit-identical to cells.with_georef's
-    JVM expressions) + the exact-byte md5 (matches ``F.md5``). Replaces
-    the r5 ``feats.join(ident, "image_id")`` formulation, which scanned
-    the images twice and paid a full self-join shuffle inside the
-    checkpointed stage (guide §2.4: remove shuffles outright). Column set
-    and values are identical to that join's output (schema order included;
-    the r5 stage dropped ``error``)."""
-    from jimmy_spark.functions.georef import latlon_e7_np
-
-    def _batch(pdf: pd.DataFrame, cache: dict) -> pd.DataFrame:
-        n = len(pdf)
-        cols = {
-            "image_id": pdf["image_id"].to_numpy(),
-            "ok": np.zeros(n, dtype=bool),
-            "ahash": np.zeros(n, dtype=np.int64),
-            "dhash": np.zeros(n, dtype=np.int64),
-            "phash_dct": np.zeros(n, dtype=np.int64),
-            "sharp_e3": np.zeros(n, dtype=np.int64),
-            "clip_e3": np.zeros(n, dtype=np.int64),
-            "content_md5": np.full(n, None, dtype=object),
-        }
-        for i, tup in enumerate(_curation_rows(pdf, cache)):
-            (
-                cols["ok"][i], _err,
-                cols["ahash"][i], cols["dhash"][i], cols["phash_dct"][i],
-                cols["sharp_e3"][i], cols["clip_e3"][i],
-                cols["content_md5"][i],
-            ) = tup
-        lat, lon = latlon_e7_np(pdf["phash"].to_numpy(np.int64))
-        cols["lat_e7"] = lat
-        cols["lon_e7"] = lon
-        return pd.DataFrame(cols)[
-            [
-                "image_id", "ok", "ahash", "dhash", "phash_dct",
-                "sharp_e3", "clip_e3", "lat_e7", "lon_e7", "content_md5",
-            ]
-        ]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict = {}
-        for pdf in batches:
-            yield _batch(pdf, cache)
-
-    return images.select("image_id", "bytes", "fmt", "phash").mapInPandas(
-        gen, CURATION_FULL_SCHEMA
+    crossing and zero shuffle: all three perceptual hashes, the
+    exact-integer quality pair (multimodal._quality_ints —
+    variance-of-Laplacian sharpness, clipped-pixel fraction) and the
+    exact-byte md5 (matches ``F.md5``), then georef as cells.with_georef's
+    JVM expressions over the passed-through ``phash``. The --scene-hash
+    choice is a column pick, never a re-decode; shared columns are
+    bit-identical to image_features / image_fingerprints (asserted in
+    tests/test_fingerprints.py). The column set and order are the r5
+    ``feats.join(ident, "image_id")`` formulation's (which dropped
+    ``error``), without its second scan and self-join shuffle."""
+    feats = blob_features(images, CURATION_COLS, keep=("image_id", "phash"))
+    return with_georef(feats).select(
+        "image_id", "ok", "ahash", "dhash", "phash_dct", "sharp_e3",
+        "clip_e3", "lat_e7", "lon_e7", "content_md5",
     )
 
 

@@ -18,18 +18,16 @@ Output: one row per input image; PIP matches as an array<string> column
 
 from __future__ import annotations
 
-import hashlib
-import zlib
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from jimmy_spark.codecs import decode_image
 from jimmy_spark.functions import georef, hexgrid, s2, tiles
 from jimmy_spark.functions.raycast import inside_ring
 from jimmy_spark.functions.rtree import STRtree
+from jimmy_spark.operators.decode import sized_columns
 from jimmy_spark.operators.pip import _polygons_to_arrays
 
 FUSED_SCHEMA = (
@@ -49,78 +47,22 @@ def fused_spatial_stage(images: DataFrame, polygons: pd.DataFrame) -> DataFrame:
     tree = STRtree(min_x, min_y, max_x, max_y)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Content-addressed decode cache, per task. Web-scale image
-        # corpora are duplicate-heavy BY DESIGN (the dedup ladder exists
-        # because the same bytes recur millions of times — mirrors,
-        # reposts, thumbnails); decode+crc is a pure function of
-        # (fmt, bytes), so identical blobs pay it once per task instead
-        # of once per row (measured 4.4x blob duplication in the bench
-        # corpus -> 6x on the decode loop, the kernel's dominant cost).
-        # Only the blob-determined triple (decoded shape, crc, error) is
-        # cached — the shape-vs-declared-(w,h) validation stays PER ROW,
-        # so two rows sharing bytes but declaring different sizes still
-        # get their own verdicts. Keys are (fmt, blake2b-128(bytes)), NOT
-        # the bytes themselves: keying on the raw blob would pin up to
-        # _CACHE_CAP full images (and their Arrow batch buffers) in
-        # executor memory — tens of GB for unique-heavy megapixel tasks.
-        # The 16-byte digest keeps each entry ~100 bytes regardless of
-        # blob size (128-bit collision odds are negligible at any corpus
-        # size), so the cache tops out at a few MB; cleared at the cap.
-        cache: dict[tuple, tuple] = {}
-        _CACHE_CAP = 65536
+        # per-task content-addressed decode cache (multimodal.blob_rows):
+        # the bench corpus repeats each blob ~4.4x, and decode+crc is the
+        # kernel's dominant cost
+        cache: dict = {}
         for pdf in batches:
             n = len(pdf)
-            ok = np.zeros(n, dtype=bool)
-            err = np.full(n, None, dtype=object)
-            checksum = np.zeros(n, dtype=np.int64)
-            blobs = pdf["bytes"].to_numpy()
-            fmts = pdf["fmt"].to_numpy()
-            ws = pdf["w"].to_numpy()
-            hs = pdf["h"].to_numpy()
-            for i in range(n):
-                # NULL blob: no digest — key on a sentinel so the decode
-                # path raises its usual ValueError and the error row is
-                # cached/replayed like any other (per-record isolation:
-                # a null must not escape as a task-killing TypeError)
-                blob = blobs[i]
-                key = (
-                    (fmts[i], hashlib.blake2b(blob, digest_size=16).digest())
-                    if blob is not None
-                    else (fmts[i], None)
-                )
-                hit = cache.get(key)
-                if hit is None:
-                    if len(cache) >= _CACHE_CAP:
-                        cache.clear()
-                    try:
-                        arr = decode_image(blob, fmts[i])
-                        # crc over the array buffer directly — decoders
-                        # return C-contiguous uint8, so this equals
-                        # crc32(tobytes()) without the per-image copy
-                        hit = (arr.shape[0], arr.shape[1], zlib.crc32(arr), None)
-                    except ValueError as e:
-                        hit = (0, 0, 0, str(e))
-                    cache[key] = hit
-                dec_h, dec_w, crc, msg = hit
-                if msg is not None:
-                    err[i] = msg
-                elif dec_w != ws[i] or dec_h != hs[i]:
-                    err[i] = (
-                        f"decoded size {dec_w}x{dec_h} != "
-                        f"declared {ws[i]}x{hs[i]}"
-                    )
-                else:
-                    checksum[i] = crc
-                    ok[i] = True
+            dec = sized_columns(pdf, ("dec_h", "dec_w", "px_checksum"), cache)
 
             phash = pdf["phash"].to_numpy(np.int64)
             lat, lon = georef.latlon_e7_np(phash)
             out = {
                 "image_id": pdf["image_id"].to_numpy(),
                 "caption": pdf["caption"].to_numpy(),
-                "ok": ok,
-                "error": err,
-                "px_checksum": checksum,
+                "ok": dec["ok"],
+                "error": dec["error"],
+                "px_checksum": dec["px_checksum"],
                 "lat_e7": lat,
                 "lon_e7": lon,
             }

@@ -7,13 +7,20 @@ audio features and video frame sampling over DETERMINISTIC FAKE codecs
 (codecs/qwav.py, qvid.py — no libsndfile/ffmpeg in this container; the
 STUB NOTICE lives in the codec modules and swapping a real decoder in
 changes only them, the Spark plumbing here is real and tested).
+
+Every image entry point (``image_features``, fingerprints.py's
+``image_fingerprints`` and ``curation_features_full``, decode.py's
+``decode_stage`` and fused.py's spatial map) resolves its rows through one
+kernel: ``blob_rows`` decodes each distinct blob once, and the column
+registry below runs only the kernels the requested columns need.
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import zlib
-from collections.abc import Iterator
+from collections.abc import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
@@ -21,14 +28,18 @@ from pyspark.sql import DataFrame
 
 from jimmy_spark.codecs import decode_image
 
-# Per-task content-addressed cache discipline shared with the fused map
-# (operators/fused.py): every output of the per-row kernels below is a
-# pure function of (fmt, bytes), so identical blobs pay decode+features
-# once per task instead of once per row (measured 4-6x blob duplication
-# in web-scale corpora and in the bench/curate fixtures). Keys are
-# (fmt, blake2b-128(bytes)) — 16-byte digests, never the blobs, so the
-# cache holds ~100 bytes/entry regardless of image size; cleared at cap.
+# Per-task content-addressed cache: every registry column is a pure
+# function of (fmt, bytes), so identical blobs pay decode+kernels once per
+# task instead of once per row (measured 4-6x blob duplication in
+# web-scale corpora and in the bench/curate fixtures). Keys are
+# (fmt, blake2b-128(bytes)) — 16-byte digests, never the blobs: keying on
+# the raw blob would pin up to _CACHE_CAP full images (and their Arrow
+# batch buffers) in executor memory, while a digest keeps each entry ~100
+# bytes regardless of image size (128-bit collision odds are negligible at
+# any corpus size). Cleared at the cap.
 _CACHE_CAP = 65536
+# images per same-shape stack: bounds the per-stack int32/float temporaries
+_GROUP = 256
 
 
 def blob_key(fmt, blob) -> tuple:
@@ -39,80 +50,7 @@ def blob_key(fmt, blob) -> tuple:
     return (fmt, hashlib.blake2b(blob, digest_size=16).digest())
 
 
-def cached_blob_fn(cache: dict | None, fmt, blob, fn):
-    """Memoize ``fn(blob, fmt)`` (a pure blob-determined row kernel) in a
-    per-task dict; ``cache=None`` runs uncached (local twins/goldens)."""
-    if cache is None:
-        return fn(blob, fmt)
-    key = blob_key(fmt, blob)
-    hit = cache.get(key)
-    if hit is None:
-        hit = fn(blob, fmt)
-        if len(cache) >= _CACHE_CAP:
-            cache.clear()
-        cache[key] = hit
-    return hit
-
-
-def _cache_put(cache: dict | None, key, val):
-    if cache is not None:
-        if len(cache) >= _CACHE_CAP:
-            cache.clear()
-        cache[key] = val
-    return val
-
-
-def grouped_blob_rows(
-    blobs, fmts, cache: dict | None, decode_fn, err_fn, group_fn,
-    chunk: int = 256,
-) -> list[tuple]:
-    """Shape-grouped execution of a blob-determined row kernel: resolve
-    cache hits, decode misses per row (codecs are inherently per-blob),
-    then stack SAME-SHAPE decoded arrays and compute the feature math
-    vectorized across the group — tiny images (the common web-corpus
-    case) otherwise pay ~1-3us of NumPy dispatch per op per row, which
-    dominates the actual arithmetic (guide §4.2: hand whole batches to
-    vectorized kernels). ``chunk`` bounds the float64 temporaries per
-    group so executor memory stays flat.
-
-    Protocol: ``decode_fn(blob, fmt) -> (u8_array, extra)`` raising
-    ValueError for corrupt rows; ``err_fn(msg, blob) -> tuple`` builds
-    the error row; ``group_fn(u83, extras) -> list[tuple]`` computes one
-    value tuple per stacked image, REPRODUCING the per-row op order
-    bit-for-bit (tests assert batched == per-row on every kernel).
-    Returns one tuple per input row, all cached like cached_blob_fn.
-    """
-    n = len(blobs)
-    out: list = [None] * n
-    pend: dict[tuple, list] = {}
-    for i in range(n):
-        key = blob_key(fmts[i], blobs[i])
-        if cache is not None:
-            hit = cache.get(key)
-            if hit is not None:
-                out[i] = hit
-                continue
-        try:
-            u8, extra = decode_fn(blobs[i], fmts[i])
-        except ValueError as e:
-            out[i] = _cache_put(cache, key, err_fn(str(e), blobs[i]))
-            continue
-        pend.setdefault(u8.shape, []).append((i, key, u8, extra))
-    for items in pend.values():
-        for c0 in range(0, len(items), chunk):
-            part = items[c0 : c0 + chunk]
-            u83 = np.stack([u for _, _, u, _ in part])
-            rows = group_fn(u83, [x for _, _, _, x in part])
-            for (i, key, _, _), tup in zip(part, rows):
-                out[i] = _cache_put(cache, key, tup)
-    return out
-
-FEATURE_SCHEMA = (
-    "image_id string, ok boolean, error string, "
-    "mean_r double, mean_g double, mean_b double, "
-    "std_lum double, edge_energy double, "
-    "ahash long, thumb_crc long, sharp_e3 long, clip_e3 long"
-)
+# --- per-row reference kernels (tests assert the registry equals them) ----
 
 
 def _quality_ints(arr_u8: np.ndarray) -> tuple[int, int]:
@@ -165,11 +103,17 @@ def _ahash(gray: np.ndarray) -> np.int64:
     return np.int64(np.uint64(val).view(np.int64))
 
 
-def _resize_nn(arr: np.ndarray, w: int, h: int) -> np.ndarray:
-    """Nearest-neighbor resize (deterministic integer index math)."""
-    sh, sw = arr.shape[:2]
+def _resize_nn(
+    arr: np.ndarray, w: int, h: int, stacked: bool = False
+) -> np.ndarray:
+    """Nearest-neighbor resize to (h, w) by integer index math: output
+    index i reads source index (i * extent) // size. Resizes the first two
+    axes, or axes 1-2 of a stack of images when ``stacked``."""
+    sh, sw = arr.shape[int(stacked) : int(stacked) + 2]
     ys = (np.arange(h) * sh) // h
     xs = (np.arange(w) * sw) // w
+    if stacked:
+        return arr[:, ys][:, :, xs]
     return arr[ys][:, xs]
 
 
@@ -201,21 +145,49 @@ def _features_row(blob, fmt) -> tuple:
         return (False, str(e), 0.0, 0.0, 0.0, 0.0, 0.0, 0, 0, 0, 0)
 
 
-def _quality_ints_batch(u83: np.ndarray) -> tuple[list[int], list[int]]:
-    """``_quality_ints`` over a stack of same-shape uint8 images — all
-    integer math, so vectorization is exact by construction; the final
-    variance formula stays in arbitrary-precision Python ints per image
-    (the same no-IEEE contract)."""
+# --- the column registry ----------------------------------------------------
+
+
+class _Stack:
+    """Same-shape decoded images ``u83`` (k, h, w, 3) plus the integer
+    luma that the quality, dHash and pHash kernels share, computed at most
+    once per stack."""
+
+    def __init__(self, u83: np.ndarray):
+        self.u83 = u83
+
+    @functools.cached_property
+    def luma(self) -> np.ndarray:
+        """8-bit integer luma (k, h, w), the ``_quality_ints`` definition.
+        int32 holds every intermediate (luma <= 255000 < 2^31), so the
+        values are exactly the int64 per-row ones."""
+        a32 = self.u83.astype(np.int32)
+        return (299 * a32[..., 0] + 587 * a32[..., 1] + 114 * a32[..., 2]) // 1000
+
+
+def _decoded(s: _Stack) -> tuple:
+    k, h, w = s.u83.shape[:3]
+    # buffer-protocol crc of each C-contiguous stacked image: the value of
+    # crc32(tobytes()) without the copy
+    return [h] * k, [w] * k, [zlib.crc32(u) for u in s.u83]
+
+
+def _px_mean_milli(s: _Stack) -> tuple:
+    k = len(s.u83)
+    return (s.u83.reshape(k, -1).sum(axis=1, dtype=np.int64) * 1000 // s.u83[0].size,)
+
+
+def _quality_ints_batch(s: _Stack) -> tuple[list[int], list[int]]:
+    """``_quality_ints`` over a stack — all integer math, so vectorization
+    is exact by construction; the final variance formula stays in
+    arbitrary-precision Python ints per image (the same no-IEEE contract)."""
+    u83 = s.u83
     k, h, w = u83.shape[:3]
     if h >= 3 and w >= 3:
-        # int32 intermediates: every value is bounded (luma <= 255000,
-        # |lap| <= 1020, lap^2 <= 1,040,400 — all < 2^31) and the sums
-        # accumulate in explicit int64, so results are exactly the int64
-        # per-row kernel's at half the memory traffic
-        a32 = u83.astype(np.int32)
-        luma3 = (
-            299 * a32[:, :, :, 0] + 587 * a32[:, :, :, 1] + 114 * a32[:, :, :, 2]
-        ) // 1000
+        # int32 intermediates: |lap| <= 1020 and lap^2 <= 1,040,400, and
+        # the sums accumulate in explicit int64, so results are exactly
+        # the int64 per-row kernel's at half the memory traffic
+        luma3 = s.luma
         lap3 = (
             4 * luma3[:, 1:-1, 1:-1]
             - luma3[:, :-2, 1:-1] - luma3[:, 2:, 1:-1]
@@ -234,99 +206,206 @@ def _quality_ints_batch(u83: np.ndarray) -> tuple[list[int], list[int]]:
     return sharp, [(1000 * int(c)) // (h * w) for c in clip3]
 
 
-_T16 = np.arange(16)
+def _thumb_crcs(s: _Stack) -> tuple:
+    thumbs = _resize_nn(s.u83, 16, 16, stacked=True)
+    return ([zlib.crc32(t.tobytes()) for t in thumbs],)
 
 
-def _features_group(u83: np.ndarray, _extras: list) -> list[tuple]:
-    """Batched ``_features_row`` over a stack of same-shape decoded
-    images. Everything elementwise or integer runs ONE NumPy dispatch
-    per GROUP (astype, luma matmul, diffs, quality ints, thumbnails) —
-    exact in any evaluation order by construction. The six FLOAT
-    reductions (channel means, std, gradient means) and aHash stay
-    per-image, each called on a VIEW of the batched array with exactly
-    the per-row kernel's layout — the same NumPy reduction routine on an
-    identically-laid-out input, so bit-identity holds by construction
-    rather than by reduction-blocking luck (multi-axis batched means
-    were measured to drift in the last ulp at some group sizes)."""
-    k, h, w = u83.shape[:3]
-    sharp, clip = _quality_ints_batch(u83)
-    th3 = u83[:, (_T16 * h) // 16][:, :, (_T16 * w) // 16]
-    out = []
-    for j in range(k):
-        # the FLOAT path stays per-image, starting from a fresh aligned
-        # astype of the image — batched float64 stacks put per-image
-        # views at odd SIMD alignments and batched matmuls reassociate
-        # the 3-term luma dot, both of which drift the last ulp; the
-        # per-image ops below are the per-row kernel's verbatim
-        arr = u83[j].astype(np.float64)
-        lum = arr @ _LUM_W
-        gx = np.abs(np.diff(lum, axis=1)).mean() if w > 1 else 0.0
-        gy = np.abs(np.diff(lum, axis=0)).mean() if h > 1 else 0.0
-        out.append(
-            (
-                True, None,
-                arr[:, :, 0].mean(), arr[:, :, 1].mean(), arr[:, :, 2].mean(),
-                lum.std(), gx + gy, _ahash(lum),
-                zlib.crc32(th3[j].tobytes()), sharp[j], clip[j],
-            )
-        )
+def _dhashes(s: _Stack) -> tuple:
+    from jimmy_spark.operators.fingerprints import _dhash_batch  # imports us
+
+    return (_dhash_batch(s.luma),)
+
+
+def _phashes(s: _Stack) -> tuple:
+    from jimmy_spark.operators.fingerprints import _phash_batch  # imports us
+
+    return (_phash_batch(s.luma),)
+
+
+def _stats(arr: np.ndarray, lum: np.ndarray) -> tuple:
+    h, w = lum.shape
+    gx = np.abs(np.diff(lum, axis=1)).mean() if w > 1 else 0.0
+    gy = np.abs(np.diff(lum, axis=0)).mean() if h > 1 else 0.0
+    return (
+        arr[:, :, 0].mean(), arr[:, :, 1].mean(), arr[:, :, 2].mean(),
+        lum.std(), gx + gy,
+    )
+
+
+def _md5(blob) -> tuple:
+    # matches Spark's F.md5: lowercase hex over the raw bytes
+    return (hashlib.md5(blob).hexdigest() if blob is not None else None,)
+
+
+# Kernel name -> (kernel, ((column, SQL type), ...)). A kernel fills all
+# of its columns and runs at most once per stack, and only when a
+# requested column needs it.
+# - Stack kernels take a _Stack and return one per-image sequence per
+#   column: integer math, exact in any evaluation order.
+# - Image kernels take ONE image's fresh float64 copy and its float luma
+#   and return one value per column. The float reductions stay per image
+#   on freshly allocated inputs: batched float stacks put images at odd
+#   SIMD alignments and batched matmuls reassociate the 3-term luma dot,
+#   both of which drift the last ulp (OPTIMIZATION_r06 §2).
+# - Blob kernels read the raw bytes, so error rows carry their columns too.
+_STACK_KERNELS = {
+    "decoded": (
+        _decoded, (("dec_h", "int"), ("dec_w", "int"), ("px_checksum", "long"))
+    ),
+    "px_mean": (_px_mean_milli, (("px_mean_milli", "long"),)),
+    "quality": (_quality_ints_batch, (("sharp_e3", "long"), ("clip_e3", "long"))),
+    "thumb": (_thumb_crcs, (("thumb_crc", "long"),)),
+    "dhash": (_dhashes, (("dhash", "long"),)),
+    "phash": (_phashes, (("phash_dct", "long"),)),
+}
+_IMAGE_KERNELS = {
+    "stats": (
+        _stats,
+        (("mean_r", "double"), ("mean_g", "double"), ("mean_b", "double"),
+         ("std_lum", "double"), ("edge_energy", "double")),
+    ),
+    "ahash": (lambda _arr, lum: (_ahash(lum),), (("ahash", "long"),)),
+}
+_BLOB_KERNELS = {"md5": (_md5, (("content_md5", "string"),))}
+_ALL_KERNELS = {**_STACK_KERNELS, **_IMAGE_KERNELS, **_BLOB_KERNELS}
+_KERNEL_OF = {c: k for k, (_, cs) in _ALL_KERNELS.items() for c, _ in cs}
+_TYPE = {  # column -> SQL type
+    "ok": "boolean", "error": "string",
+    **{c: t for _, cs in _ALL_KERNELS.values() for c, t in cs},
+}
+_DTYPE = {
+    "boolean": bool, "string": object, "int": np.int32, "long": np.int64,
+    "double": np.float64,
+}
+
+
+def _run_kernels(u83: np.ndarray, stack_ks: list, image_ks: list) -> dict:
+    """column -> per-image values for one stack, from the given kernels."""
+    s = _Stack(u83)
+    vals: dict = {}
+    for fn, cs in stack_ks:
+        vals.update(zip((c for c, _ in cs), fn(s)))
+    if image_ks:
+        for c in (c for _, cs in image_ks for c, _ in cs):
+            vals[c] = []
+        for u8 in u83:
+            arr = u8.astype(np.float64)
+            lum = arr @ _LUM_W
+            for fn, cs in image_ks:
+                for (c, _), v in zip(cs, fn(arr, lum)):
+                    vals[c].append(v)
+    return vals
+
+
+def blob_rows(blobs, fmts, cols: Sequence[str], cache: dict | None) -> list[tuple]:
+    """Resolve each row to ``(ok, error, *cols)`` — the per-row reference
+    kernels' tuple layout. One cache lookup per row and one decode per
+    distinct (fmt, blob): repeats within the call wait on the first
+    occurrence, and ``cache`` (a per-task dict serving ONE column list;
+    None runs uncached) carries results across calls. Decoded images are
+    stacked by shape, ``_GROUP`` at a time, and each stack runs only the
+    kernels ``cols`` needs: tiny images (the common web-corpus case)
+    otherwise pay ~1-3us of NumPy dispatch per op per row, which dominates
+    the arithmetic. A blob the codec rejects (ValueError, NULL included)
+    resolves to ``(False, message, 0, ...)`` with its blob-kernel columns
+    still filled."""
+    want = {_KERNEL_OF[c] for c in cols}
+    stack_ks = [v for k, v in _STACK_KERNELS.items() if k in want]
+    image_ks = [v for k, v in _IMAGE_KERNELS.items() if k in want]
+    blob_ks = [v for k, v in _BLOB_KERNELS.items() if k in want]
+    out: list = [None] * len(blobs)
+    rows_of: dict[tuple, list[int]] = {}  # key -> the rows it resolves
+    done: dict[tuple, tuple] = {}
+    stacks: dict[tuple, list] = {}  # shape -> [(key, u8, blob values)]
+    for i, (blob, fmt) in enumerate(zip(blobs, fmts)):
+        key = blob_key(fmt, blob)
+        if key in rows_of:
+            rows_of[key].append(i)
+            continue
+        hit = None if cache is None else cache.get(key)
+        if hit is not None:
+            out[i] = hit
+            continue
+        rows_of[key] = [i]
+        bv = {c: v for fn, cs in blob_ks for (c, _), v in zip(cs, fn(blob))}
+        try:
+            u8 = decode_image(blob, fmt)
+        except ValueError as e:
+            done[key] = (False, str(e), *(bv.get(c, 0) for c in cols))
+            continue
+        stacks.setdefault(u8.shape, []).append((key, u8, bv))
+    for items in stacks.values():
+        for g0 in range(0, len(items), _GROUP):
+            part = items[g0 : g0 + _GROUP]
+            u83 = np.stack([u for _, u, _ in part])
+            vals = _run_kernels(u83, stack_ks, image_ks)
+            for j, (key, _, bv) in enumerate(part):
+                done[key] = (
+                    True, None, *(bv[c] if c in bv else vals[c][j] for c in cols)
+                )
+    for key, rows in rows_of.items():
+        val = done[key]
+        if cache is not None:
+            if len(cache) >= _CACHE_CAP:
+                cache.clear()
+            cache[key] = val
+        for i in rows:
+            out[i] = val
     return out
 
 
-def _features_decode(blob, fmt):
-    return decode_image(blob, fmt), None
+def blob_columns(
+    pdf: pd.DataFrame, cols: Sequence[str], cache: dict | None = None
+) -> dict[str, np.ndarray]:
+    """``blob_rows`` over one Arrow batch (``bytes``, ``fmt``) as typed
+    columns: ``ok``, ``error``, then ``cols``."""
+    names = ("ok", "error", *cols)
+    rows = blob_rows(pdf["bytes"].to_numpy(), pdf["fmt"].to_numpy(), cols, cache)
+    vals = list(zip(*rows)) or [()] * len(names)
+    return {c: np.array(v, dtype=_DTYPE[_TYPE[c]]) for c, v in zip(names, vals)}
 
 
-def _features_err(msg: str, _blob) -> tuple:
-    return (False, msg, 0.0, 0.0, 0.0, 0.0, 0.0, 0, 0, 0, 0)
-
-
-def _features_batch(pdf: pd.DataFrame, cache: dict | None = None) -> pd.DataFrame:
-    """Feature kernel (module-level so the golden-oracle generator can
-    run it locally on the same rows — all ops are per-row-deterministic,
-    so batch boundaries cannot change results). Rows resolve through the
-    per-task content-addressed memo (``cache``; None runs uncached), and
-    misses compute shape-grouped (``_features_group``) — both paths
-    bit-identical to the r5 per-row loop."""
-    n = len(pdf)
-    cols = {
-        "image_id": pdf["image_id"].to_numpy(),
-        "ok": np.zeros(n, dtype=bool),
-        "error": np.full(n, None, dtype=object),
-        "mean_r": np.zeros(n), "mean_g": np.zeros(n), "mean_b": np.zeros(n),
-        "std_lum": np.zeros(n), "edge_energy": np.zeros(n),
-        "ahash": np.zeros(n, dtype=np.int64),
-        "thumb_crc": np.zeros(n, dtype=np.int64),
-        "sharp_e3": np.zeros(n, dtype=np.int64),
-        "clip_e3": np.zeros(n, dtype=np.int64),
-    }
-    rows = grouped_blob_rows(
-        pdf["bytes"].to_numpy(), pdf["fmt"].to_numpy(), cache,
-        _features_decode, _features_err, _features_group,
+def blob_features(
+    images: DataFrame, cols: Sequence[str], keep: Sequence[str] = ()
+) -> DataFrame:
+    """One Arrow crossing over ``images`` (``bytes``, ``fmt``): the
+    ``keep`` columns passed through, then ``ok``, ``error`` and the
+    registry columns ``cols``. Each distinct blob pays decode+kernels once
+    per task; a corrupt row flows out with ok=false and its error instead
+    of failing the task (FIXTURES.md §7)."""
+    cols, keep = tuple(cols), tuple(keep)
+    unknown = [c for c in cols if c not in _KERNEL_OF]
+    if unknown:
+        raise ValueError(f"unknown blob feature column(s): {unknown}")
+    schema = ", ".join(
+        [f"{c} {images.schema[c].dataType.simpleString()}" for c in keep]
+        + [f"{c} {_TYPE[c]}" for c in ("ok", "error", *cols)]
     )
-    for i, tup in enumerate(rows):
-        (
-            cols["ok"][i], cols["error"][i],
-            cols["mean_r"][i], cols["mean_g"][i], cols["mean_b"][i],
-            cols["std_lum"][i], cols["edge_energy"][i],
-            cols["ahash"][i], cols["thumb_crc"][i],
-            cols["sharp_e3"][i], cols["clip_e3"][i],
-        ) = tup
-    return pd.DataFrame(cols)
-
-
-def image_features(images: DataFrame) -> DataFrame:
-    """decode -> per-channel means, luminance std, gradient energy, aHash,
-    16x16 thumbnail crc. Error-isolated like operators/decode.py. Identical
-    blobs pay the decode+feature kernel once per task (content-addressed
-    cache, the fused-map discipline)."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cache: dict = {}
         for pdf in batches:
-            yield _features_batch(pdf, cache)
+            kept = {c: pdf[c].to_numpy() for c in keep}
+            yield pd.DataFrame({**kept, **blob_columns(pdf, cols, cache)})
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(gen, FEATURE_SCHEMA)
+    return images.select(*dict.fromkeys((*keep, "bytes", "fmt"))).mapInPandas(
+        gen, schema
+    )
+
+
+FEATURE_COLS = (
+    "mean_r", "mean_g", "mean_b", "std_lum", "edge_energy",
+    "ahash", "thumb_crc", "sharp_e3", "clip_e3",
+)
+
+
+def image_features(images: DataFrame) -> DataFrame:
+    """decode -> per-channel means, luminance std, gradient energy, aHash,
+    16x16 thumbnail crc and the quality pair, one row per image."""
+    return blob_features(images, FEATURE_COLS, keep=("image_id",))
+
+
 
 
 # --- audio / video: real Spark plumbing over deterministic fake codecs ----

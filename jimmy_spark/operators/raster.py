@@ -36,6 +36,7 @@ from pyspark.sql import types as T
 
 from jimmy_spark.codecs import png
 from jimmy_spark.functions import tiles
+from jimmy_spark.operators.multimodal import _resize_nn
 
 TILE_PX = 256  # 2^8 — the web-mercator standard
 
@@ -315,10 +316,7 @@ def thumb_nn(arr: "np.ndarray", s: int = THUMB_PX) -> "np.ndarray":
     """Exact nearest-neighbor downsample to (s, s, 3): source index for
     output index i is (i * src_extent) // s — pure integer math, so thumbs
     are deterministic across partitionings and re-implementable in tests."""
-    h, w = arr.shape[:2]
-    ri = (np.arange(s, dtype=np.int64) * h) // s
-    ci = (np.arange(s, dtype=np.int64) * w) // s
-    return arr[ri][:, ci]
+    return _resize_nn(arr, s, s)
 
 
 def render_mosaic_tiles(

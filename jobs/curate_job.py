@@ -122,13 +122,14 @@ def main() -> int:
 
     def featurize(df):
         # per-row pure kernels (bucket-local, hence resumable): decode +
-        # quality ints + ALL THREE perceptual hashes + georef + exact-byte
-        # md5 in ONE Arrow crossing and ONE scan of the bytes column
-        # (operators/fingerprints.curation_features_full — the
-        # --scene-hash choice is then a column pick, never a re-decode).
-        # r5 computed features and georef/md5 as two scans joined by
-        # image_id — a full shuffle of the stage inside every chunk;
-        # same columns, same values, no join (guide §2.4).
+        # quality ints + ALL THREE perceptual hashes + exact-byte md5 in
+        # ONE Arrow crossing and ONE scan of the bytes column, georef as
+        # JVM expressions after it (operators/fingerprints.
+        # curation_features_full over the multimodal.blob_features
+        # kernel — the --scene-hash choice is then a column pick, never a
+        # re-decode). r5 computed features and georef/md5 as two scans
+        # joined by image_id — a full shuffle of the stage inside every
+        # chunk; same columns, same values, no join (guide §2.4).
         return fingerprints.curation_features_full(df)
 
     feats = runner.run_stage(

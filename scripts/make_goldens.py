@@ -77,11 +77,13 @@ def golden_decode_stats() -> pd.DataFrame:
 
 
 def golden_image_features() -> pd.DataFrame:
-    from jimmy_spark.operators.multimodal import _features_batch
+    from jimmy_spark.operators.multimodal import FEATURE_COLS, blob_columns
     from jimmy_spark.queries import _t2
 
     imgs = pd.read_parquet(f"{_t2()}/images.parquet")
-    out = _features_batch(imgs)
+    out = pd.DataFrame(
+        {"image_id": imgs["image_id"].to_numpy(), **blob_columns(imgs, FEATURE_COLS)}
+    )
     # keep the all-null error column STRING-typed in parquet (an all-None
     # object column would be written as null type -> DuckDB float64 NaN,
     # mismatching Spark's string/None)

@@ -94,3 +94,22 @@ def test_query_matches_oracle(spark, con, contract, name):
 
 # (no rows-only queries remain: fuzzy_pairs gained a golden-parquet
 # oracle in round 5 and now runs through test_query_matches_oracle)
+
+
+@pytest.mark.parametrize("name", ["image_features", "decode_stats"])
+def test_golden_regenerates_bit_identical(name):
+    """scripts/make_goldens.py rebuilds these goldens from the local image
+    kernels; their output must still equal the committed parquet, so a
+    kernel change that drifts one bit fails here, without Spark."""
+    import importlib.util
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    spec = importlib.util.spec_from_file_location(
+        "make_goldens", repo / "scripts" / "make_goldens.py"
+    )
+    mg = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mg)
+    got = getattr(mg, f"golden_{name}")()
+    exp = pd.read_parquet(repo / "goldens" / f"{name}.parquet")
+    pd.testing.assert_frame_equal(got.reset_index(drop=True), exp)

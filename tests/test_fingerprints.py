@@ -16,7 +16,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from jimmy_spark.codecs import encode_image
+from jimmy_spark.codecs import decode_image, encode_image
 from jimmy_spark.operators import fingerprints as fp
 
 SEED = 23
@@ -182,13 +182,31 @@ def test_spark_lane_matches_twins_and_isolates_errors(spark, prints_df):
 
 
 def test_curation_features_consistent_with_audited_kernels(spark, prints_df):
-    """curation_features (the curate_job feature stage) is bit-identical
-    to image_features on the shared columns and to image_fingerprints on
-    the hash columns — one decode, same values."""
+    """curation_features_full (the curate_job feature stage) is
+    bit-identical to image_features on the shared columns and to
+    image_fingerprints on the hash columns — one decode, same values —
+    and its JVM georef and md5 equal the NumPy georef and hashlib md5."""
+    import hashlib
+
+    from pyspark.sql import functions as F
+
+    from jimmy_spark.functions.georef import latlon_e7_np
     from jimmy_spark.operators import multimodal
 
-    df, _ = prints_df
-    cur = {r["image_id"]: r for r in fp.curation_features(df).collect()}
+    df, rows = prints_df
+    staged = df.withColumn("phash", F.xxhash64("image_id"))
+    cur = {
+        r["image_id"]: r for r in fp.curation_features_full(staged).collect()
+    }
+    phash = {
+        r["image_id"]: r["phash"]
+        for r in staged.select("image_id", "phash").collect()
+    }
+    blobs = {img_id: blob for img_id, blob, _ in rows}
+    for img_id, r in cur.items():
+        lat, lon = latlon_e7_np(np.array([phash[img_id]], dtype=np.int64))
+        assert (r["lat_e7"], r["lon_e7"]) == (lat[0], lon[0])
+        assert r["content_md5"] == hashlib.md5(blobs[img_id]).hexdigest()
     feats = {r["image_id"]: r for r in multimodal.image_features(df).collect()}
     prints = {r["image_id"]: r for r in fp.image_fingerprints(df).collect()}
     assert set(cur) == set(feats) == set(prints)
@@ -211,6 +229,7 @@ def test_scene_keep_best_over_dhash_matches_duckdb_twin(spark):
     from pyspark.sql import functions as F
 
     from jimmy_spark.operators import imagedup
+    from jimmy_spark.operators import multimodal as mm
 
     rng = np.random.default_rng(SEED + 4)
     rows = []
@@ -246,7 +265,11 @@ def test_scene_keep_best_over_dhash_matches_duckdb_twin(spark):
         [(r[0], r[3], r[4]) for r in rows],
         "image_id string, lat_e7 long, lon_e7 long",
     )
-    pts = fp.curation_features(imgs).filter("ok").join(coords, "image_id")
+    pts = (
+        mm.blob_features(imgs, fp.CURATION_COLS, keep=("image_id",))
+        .filter("ok")
+        .join(coords, "image_id")
+    )
     D, T = 1000, 6
     num_id = "CAST(substr(image_id, 2, 3) AS BIGINT)"
     got = {
@@ -303,16 +326,9 @@ def test_near_dup_lane_finds_planted_pairs(spark):
     assert got == want
 
 
-def test_batched_kernels_bit_identical_to_per_row_and_cache_semantics():
-    """r6 optimization guards: the shape-grouped batch kernels
-    (multimodal._features_group / fingerprints._fingerprints_group /
-    _curation_group, incl. the float64-BLAS DCT) must reproduce the
-    per-row reference kernels bit-for-bit on every corpus shape, corrupt
-    rows included, and the per-task content-addressed cache must be
-    value-transparent (same outputs with and without, error rows
-    replayed from cache like any other)."""
-    from jimmy_spark.operators import multimodal as mm
-
+def _kernel_corpus() -> pd.DataFrame:
+    """Mixed shapes and formats, truncated (corrupt) rows and exact byte
+    duplicates (cache hits)."""
     rng = np.random.default_rng(SEED + 9)
     rows = []
     for i in range(120):
@@ -325,35 +341,83 @@ def test_batched_kernels_bit_identical_to_per_row_and_cache_semantics():
         rows.append((f"img{i:03d}", data, fmt))
         if i % 6 == 1:  # plant exact byte duplicates -> cache hits
             rows.append((f"dup{i:03d}", data, fmt))
-    pdf = pd.DataFrame(rows, columns=["image_id", "bytes", "fmt"])
+    return pd.DataFrame(rows, columns=["image_id", "bytes", "fmt"])
 
-    # features: per-row reference vs batched, cached vs uncached
-    ref = [mm._features_row(b, f) for b, f in zip(pdf["bytes"], pdf["fmt"])]
-    for cache in (None, {}):
-        got = mm._features_batch(pdf, cache)
-        for i, r in enumerate(ref):
-            assert tuple(got.iloc[i, 1:]) == tuple(r), f"features row {i}"
-    # fingerprints
-    refp = [fp._fingerprints_row(b, f) for b, f in zip(pdf["bytes"], pdf["fmt"])]
-    for cache in (None, {}):
-        got = fp._fingerprints_batch(pdf, cache)
-        for i, r in enumerate(refp):
-            assert tuple(got.iloc[i, 1:]) == tuple(r), f"fingerprints row {i}"
-    # curation rows (md5 carried on error rows too)
-    refc = [fp._curation_row(b, f) for b, f in zip(pdf["bytes"], pdf["fmt"])]
-    for cache in (None, {}):
-        gotc = fp._curation_rows(pdf, cache)
-        assert all(tuple(a) == tuple(b) for a, b in zip(refc, gotc))
+
+def test_batched_kernels_bit_identical_to_per_row_and_cache_semantics():
+    """r6 optimization guards: the blob-kernel registry
+    (multimodal.blob_rows — shape-grouped stacks, incl. the float64-BLAS
+    DCT) must reproduce the per-row reference kernels bit-for-bit on every
+    registry column and corpus shape, corrupt rows included (md5 is set on
+    them too), and the per-task content-addressed cache must be
+    value-transparent (same outputs with and without, error rows replayed
+    from cache like any other)."""
+    from jimmy_spark.operators import decode as dec
+    from jimmy_spark.operators import multimodal as mm
+
+    pdf = _kernel_corpus()
+    pairs = list(zip(pdf["bytes"], pdf["fmt"]))
+
+    def decode_ref(b, f):
+        dh, dw, crc, mean, err = dec._decode_row(b, f)
+        return (err is None, err, dh, dw, crc, mean)
+
+    refs = {
+        mm.FEATURE_COLS: [mm._features_row(b, f) for b, f in pairs],
+        fp.FINGERPRINT_COLS: [fp._fingerprints_row(b, f) for b, f in pairs],
+        fp.CURATION_COLS: [fp._curation_row(b, f) for b, f in pairs],
+        ("dec_h", "dec_w", "px_checksum", "px_mean_milli"): [
+            decode_ref(b, f) for b, f in pairs
+        ],
+    }
+    # every registry column has a per-row reference here
+    assert {c for cols in refs for c in cols} == set(mm._KERNEL_OF)
+    for cols, ref in refs.items():
+        for cache in (None, {}):
+            got = mm.blob_columns(pdf, cols, cache)
+            for i, r in enumerate(ref):
+                row = tuple(got[c][i] for c in ("ok", "error", *cols))
+                assert row == tuple(r), f"{cols} row {i}"
+            assert mm.blob_rows(pdf["bytes"], pdf["fmt"], cols, cache) == ref
 
     # cache fills with one entry per distinct (fmt, blob) and is reused:
     # a poisoned cache entry must be read back verbatim (proves hits
     # short-circuit the kernel)
     cache = {}
-    mm._features_batch(pdf, cache)
+    mm.blob_columns(pdf, mm.FEATURE_COLS, cache)
     n_distinct = len({(f, bytes(b)) for f, b in zip(pdf["fmt"], pdf["bytes"])})
     assert len(cache) == n_distinct
     key = mm.blob_key(pdf["fmt"][1], pdf["bytes"][1])
     poisoned = (True, None, 1.0, 2.0, 3.0, 4.0, 5.0, 6, 7, 8, 9)
     cache[key] = poisoned
-    again = mm._features_batch(pdf.iloc[[1]], cache)
-    assert tuple(again.iloc[0, 1:]) == poisoned
+    again = mm.blob_columns(pdf.iloc[[1]], mm.FEATURE_COLS, cache)
+    assert tuple(v[0] for v in again.values()) == poisoned
+
+
+def test_blob_kernel_runs_only_requested_kernels(monkeypatch):
+    """blob_features(df, ["ahash"]) maps blob_columns over each batch; it
+    decodes each distinct blob once and never runs the kernels that
+    other columns need (each one here raises if called)."""
+    from jimmy_spark.operators import multimodal as mm
+
+    def boom(*_args):
+        raise AssertionError("ran a kernel no requested column needs")
+
+    for reg in (mm._STACK_KERNELS, mm._IMAGE_KERNELS, mm._BLOB_KERNELS):
+        for name, (_, cols) in list(reg.items()):
+            if name != "ahash":
+                monkeypatch.setitem(reg, name, (boom, cols))
+    decodes = []
+
+    def counted(blob, fmt):
+        decodes.append(1)
+        return decode_image(blob, fmt)
+
+    monkeypatch.setattr(mm, "decode_image", counted)
+    pdf = _kernel_corpus()
+    got = mm.blob_columns(pdf, ["ahash"])
+    distinct = {(f, bytes(b)) for f, b in zip(pdf["fmt"], pdf["bytes"])}
+    assert len(decodes) == len(distinct)
+    ref = [mm._features_row(b, f) for b, f in zip(pdf["bytes"], pdf["fmt"])]
+    assert list(got["ahash"]) == [r[7] for r in ref]
+    assert list(got["ok"]) == [r[0] for r in ref]

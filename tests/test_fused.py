@@ -45,12 +45,14 @@ def test_fused_matches_modular(spark, t1_dir):
     assert pairs_fused == pairs_modular and len(pairs_fused) > 0
 
 
-def test_fused_decode_cache_is_per_row_correct(spark, t1_dir):
-    """The r5 content-addressed decode cache memoizes only the
-    blob-determined triple (shape, crc, error); the shape-vs-declared
-    validation must stay per row. Rows sharing identical bytes but
-    declaring different sizes get different verdicts, and a repeated
-    corrupt blob reports the same error on every row."""
+@pytest.mark.parametrize("stage", ["fused", "decode"])
+def test_fused_decode_cache_is_per_row_correct(spark, t1_dir, stage):
+    """The content-addressed decode cache memoizes only blob-determined
+    values (shape, crc, error); the shape-vs-declared validation that
+    fused_spatial_stage and decode_stage share must stay per row. Rows
+    sharing identical bytes but declaring different sizes get different
+    verdicts, and a repeated corrupt blob reports the same error on every
+    row."""
     import numpy as np
 
     from jimmy_spark.codecs import qjpg
@@ -73,11 +75,12 @@ def test_fused_decode_cache_is_per_row_correct(spark, t1_dir):
         "image_id string, bytes binary, w int, h int, fmt string, "
         "caption string, phash long",
     )
-    poly_pdf = pq.read_table(f"{t1_dir}/polygons.parquet").to_pandas()
-    out = {
-        r.image_id: r
-        for r in fused.fused_spatial_stage(imgs, poly_pdf).collect()
-    }
+    if stage == "fused":
+        poly_pdf = pq.read_table(f"{t1_dir}/polygons.parquet").to_pandas()
+        staged = fused.fused_spatial_stage(imgs, poly_pdf)
+    else:
+        staged = decode.decode_stage(imgs)
+    out = {r.image_id: r for r in staged.collect()}
     assert out["a"].ok and out["c"].ok
     assert out["a"].px_checksum == out["c"].px_checksum != 0
     assert not out["b"].ok

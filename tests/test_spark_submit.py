@@ -917,7 +917,7 @@ def test_spark_submit_curate_adaptive_gate(spark, tmp_path):
     stats = json.loads(p.stdout.strip().splitlines()[-1])
 
     feats = (
-        fingerprints.curation_features(read_images(spark, str(imgs)))
+        fingerprints.curation_features_full(read_images(spark, str(imgs)))
         .filter("ok")
         .select("image_id", "sharp_e3")
         .toPandas()
